@@ -1,19 +1,22 @@
 package graft.operators
 
-import graft.ann.{BinIvf, Hnsw, Ivf, RaBitQ, SparseInverted, Sq8}
+import graft.ann.{BinIvf, Hnsw, Ivf, Lsh, Pq, RaBitQ, SparseInverted, Sq8}
 import graft.expr.MilvusExpr
-import graft.store.{Collection, IndexStore}
+import graft.store.{Collection, CollectionDef, IndexFamily, IndexStore}
+import graft.store.IndexStore.{DenseBuild, IvfBuild, LshBuild, PqBuild, RabitqBuild, Sq8Build}
 import graft.text.Bm25
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Index-aware search over a store collection: consults the declared
-  * IndexDefs (S4) and per-query search params (V4) to pick the
-  * physical path — a PERSISTED IVF index (probe cells prune parquet
-  * partition directories) + exact re-rank when an IVF index is
-  * declared and `nprobe` given, exact scan otherwise. Metric defaults
-  * to the index's declared metric_type (workload.py:126-131 default
-  * COSINE).
+  * IndexDefs (S4, resolved once through the [[IndexFamily]] table) and
+  * per-query search params (V4) to pick the physical path — a PERSISTED
+  * index build (probe cells prune parquet partition directories) +
+  * exact re-rank when an ANN index is declared and a probe budget
+  * given, exact scan otherwise. Metric defaults to the index's declared
+  * metric_type (workload.py:126-131 default COSINE). [[search]] and
+  * [[searchBatch]] share one route resolver ([[resolve]]) and differ
+  * only in the per-route kernel (single-query vs batched).
   *
   * Index freshness is delegated to [[IndexStore]]: builds are keyed on
   * the collection's write-seq, so DML invalidates automatically and
@@ -33,38 +36,31 @@ object CollectionSearch {
   private[operators] def simLikeMetric(metric: String): Boolean =
     Set("IP", "COSINE").contains(metric.toUpperCase)
 
-  /** IVF_PQ shape params from the declared index: Milvus names them
-    * `m` and `nbits` (ksub = 2^nbits, default 8); an explicit `ksub`
-    * is accepted too.
-    */
-  private def pqShape(ix: graft.store.IndexDef): (Int, Int) = (
-    ix.params.get("m").map(_.toInt).getOrElse(8),
-    ix.params.get("nbits").map(b => 1 << b.toInt)
-      .orElse(ix.params.get("ksub").map(_.toInt)).getOrElse(256))
+  /** The search filter compiled against `df`; None when empty. */
+  private def filterOn(filterExpr: String, df: => DataFrame): Option[Column] =
+    if (filterExpr.trim.isEmpty) None
+    else Some(MilvusExpr.compile(filterExpr, df))
 
-  /** Declared HNSW routes to the GENUINE per-segment graph family
-    * ([[graft.ann.Hnsw]] persisted via [[IndexStore.ensureHnsw]]) when
-    * the graph can structurally serve the request: an integral pk
-    * (graph ids are longs) and a graph metric. Filtered searches
-    * additionally need [[hnswFilterMask]] to fit its cap — Milvus
-    * evaluates filters into a scalar-segment bitmask the graph walk
-    * consults, which here is a sorted allowed-pk array; an
-    * over-cap mask falls back to the cell-pruned IVF route, whose
-    * persisted layout carries the scalar columns inline. Note a
-    * collection alternating graph-served and IVF-fallback searches
-    * re-materializes the pointer per family (both builds stay on
-    * disk — commitPointer's GC keeps the latest two version dirs).
+  /** Partition scoping of a served frame. Persisted builds carry `_part`
+    * as the OUTER partition level (or as a data column on unpartitioned
+    * layouts), so a partition-scoped search stays on the index route
+    * and prunes whole partition subtrees before the probe prunes cells.
     */
-  private def hnswGraphRoutable(coll: Collection, vecField: String,
-      metric: String): Boolean = {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val d = coll.definition
-    d.indexes.exists(ix => ix.field == vecField &&
-        Set("HNSW", "DISKANN").contains(ix.indexType.toUpperCase)) &&
-      Set[org.apache.spark.sql.types.DataType](LongType, IntegerType)
-        .contains(d.primaryField.dataType) &&
-      Set("L2", "IP", "COSINE").contains(metric.toUpperCase)
-  }
+  private def scoped(df: DataFrame, partitionNames: Seq[String]): DataFrame =
+    if (partitionNames.isEmpty || !df.columns.contains("_part")) df
+    else df.filter(col("_part").isin(partitionNames: _*))
+
+  /** The query metric: explicit `metric_type`, else the declared
+    * index's, else COSINE — uppercased at resolution: the index
+    * layer's pointer matching is case-exact, so a lower-case declared
+    * metric alternating with another route's uppercased form would
+    * pointer-thrash full rebuilds.
+    */
+  private def metricOf(d: CollectionDef, vecField: String,
+      searchParams: Map[String, String]): String =
+    searchParams.get("metric_type")
+      .orElse(d.indexes.find(_.field == vecField).flatMap(_.metricType))
+      .getOrElse("COSINE").toUpperCase
 
   /** The filter bitmask for a declared-HNSW graph search: evaluate the
     * compiled filter over the CURRENT merged view (one filtered scan —
@@ -97,27 +93,11 @@ object CollectionSearch {
   private def hnswHits(spark: SparkSession, coll: Collection,
       vecField: String, queries: Seq[(String, Seq[Float])], k: Int,
       ef: Int, metric: String, outputFields: Seq[String],
-      partitionNames: Seq[String],
-      mask: Option[Array[Long]] = None,
-      filterExpr: String = ""): DataFrame = {
+      partitionNames: Seq[String], graph: IndexFamily.Graph,
+      mask: Option[Array[Long]], filterExpr: String): DataFrame = {
     import spark.implicits._
     val d = coll.definition
     val pk = d.primaryField.name
-    // Select the GRAPH-family def specifically (the routing predicate
-    // hnswGraphRoutable checks `exists`, so a definition carrying two
-    // index defs on one field — possible via a hand-built
-    // CollectionDef — must not have its first, non-graph def decide
-    // the DISKANN dispatch and params here).
-    val ix = d.indexes.find(i => i.field == vecField &&
-      Set("HNSW", "DISKANN").contains(i.indexType.toUpperCase)).get
-    val m = ix.params.get("M").orElse(ix.params.get("m")).map(_.toInt)
-      .getOrElse(8)
-    val efc = ix.params.get("efConstruction").map(_.toInt).getOrElse(64)
-    val segs = ix.params.get("segments").map(_.toInt).getOrElse(0)
-    val seed = ix.params.get("seed").map(_.toLong).getOrElse(42L)
-    def scopedPart(df: DataFrame): DataFrame =
-      if (partitionNames.isEmpty) df
-      else df.filter(col("_part").isin(partitionNames: _*))
     // Low-selectivity switch (the Milvus brute-force heuristic): a
     // tiny allowed set makes the beam traverse most of every segment
     // graph before it can fill ef allowed results — an exact pk-pruned
@@ -139,23 +119,19 @@ object CollectionSearch {
         // HNSW and DISKANN share the persisted node-table layout and
         // the walk — only the BUILD differs (hierarchical vs single
         // layer α-pruned with the medoid as the level-1 entry).
-        val serve =
-          if (ix.indexType.toUpperCase == "DISKANN") {
-            val r = ix.params.get("R").orElse(ix.params.get("r"))
-              .map(_.toInt).getOrElse(16)
-            val l = ix.params.get("L").orElse(ix.params.get("l"))
-              .map(_.toInt).getOrElse(64)
-            val alpha = ix.params.get("alpha").map(_.toDouble).getOrElse(1.2)
-            IndexStore.serveDiskann(spark, coll, vecField,
-              IndexStore.ensureDiskann(spark, coll, vecField, metric, r, l,
-                alpha, segs))
-          } else
+        val serve = graph match {
+          case IndexFamily.Diskann(r, l, alpha, segs, _) =>
+            val b = IndexStore.ensureDiskann(spark, coll, vecField, metric,
+              r, l, alpha, segs)
+            IndexStore.serveGraph(spark, coll, vecField, b.dataPath, b.builtSeq)
+          case h: IndexFamily.Hnsw =>
             IndexStore.serveHnsw(spark, coll, vecField,
-              IndexStore.ensureHnsw(spark, coll, vecField, metric, m,
-                efc, segs, seed))
+              IndexStore.ensureHnsw(spark, coll, vecField, metric, h.m,
+                h.efConstruction, h.segments, h.seed))
+        }
         val sealedHits =
-          Hnsw.searchParts(scopedPart(serve.sealedGraph), queries, pk, k, ef,
-              metric, mask)
+          Hnsw.searchParts(scoped(serve.sealedGraph, partitionNames), queries,
+              pk, k, ef, metric, mask)
             .select(col("qid"), col(pk).cast(d.primaryField.dataType),
               col("score"))
         serve.growing match {
@@ -165,13 +141,11 @@ object CollectionSearch {
             // filter compiles directly — no mask needed on the
             // brute-force side. Null vectors drop before scoring
             // (nullable-vector inserts land here un-indexed).
-            val g2 = scopedPart(g).filter(col(vecField).isNotNull)
-            val pred =
-              if (filterExpr.trim.isEmpty) None
-              else Some(MilvusExpr.compile(filterExpr, g2))
+            val g2 = scoped(g, partitionNames).filter(col(vecField).isNotNull)
             val qdf = queries.toDF("qid", "qvec")
             sealedHits.unionByName(
-              Knn.search(g2, qdf, vecField, pk, metric, k, pred)
+              Knn.search(g2, qdf, vecField, pk, metric, k,
+                filterOn(filterExpr, g2))
                 .select(col("qid"), col(pk), col("score")))
         }
     }
@@ -188,6 +162,105 @@ object CollectionSearch {
     withFields.orderBy(col("qid"), primary, col(pk).asc)
   }
 
+  /** A resolved dense top-k route ([[resolve]]). */
+  private sealed trait Route
+  /** `radius` in the params: a range search capped at the limit. */
+  private final case class RangeRoute(radius: Double,
+      rangeFilter: Option[Double]) extends Route
+  /** LSH buckets; `radius` is the multiprobe budget. */
+  private final case class LshRoute(build: LshBuild, served: DataFrame,
+      radius: Int) extends Route
+  /** Graph walk (or its masked exact scan) with `ef` as the beam. */
+  private final case class GraphRoute(graph: IndexFamily.Graph, ef: Int,
+      mask: Option[Array[Long]]) extends Route
+  /** Probed cells of an IVF-family build (IVF, SQ8, PQ, RaBitQ). */
+  private final case class ProbeRoute(build: DenseBuild, served: DataFrame,
+      nprobe: Int, refine: Int) extends Route
+  private final case class ExactRoute(data: DataFrame) extends Route
+
+  /** THE dense routing table for [[search]] and [[searchBatch]]: which
+    * physical path serves the call, with its build ensured and its
+    * served frame partition-scoped.
+    *
+    *  - `radius` in the params → range search capped at `limit` (the
+    *    pymilvus form: range semantics ride inside search()). Declared
+    *    LSH keeps its multiprobe-budget reading of `radius` UNLESS
+    *    `range_filter` also rides along — unambiguously the range form.
+    *  - declared LSH → the persisted multi-table bucket layout: the
+    *    probe predicate prunes (t, sig) partition directories
+    *    (radius >= num_planes probes everything = exact).
+    *  - no probe budget (`nprobe` | `ef` | `search_list_size`) → exact.
+    *  - declared HNSW/DISKANN → the GENUINE per-segment graph family
+    *    when [[IndexFamily.graphServed]] holds (integral pk, graph
+    *    metric) and a filter's allowed-pk mask fits its cap — Milvus
+    *    evaluates filters into a bitmask the walk consults; an over-cap
+    *    mask falls back to the IVF route, whose layout carries the
+    *    scalar columns inline.
+    *  - IVF_SQ8 / IVF_PQ / IVF_RABITQ → their quantized builds (ADC or
+    *    Hamming estimates over the probed cells' narrow code columns,
+    *    exact re-rank of k*refine_k).
+    *  - every other dense ANN type (IVF_*, AUTOINDEX, SCANN, non-served
+    *    graphs) → the IVF build; the budget is the probe count.
+    *  - otherwise exact.
+    */
+  private def resolve(spark: SparkSession, coll: Collection,
+      d: CollectionDef, vecField: String, metric: String, filterExpr: String,
+      searchParams: Map[String, String],
+      partitionNames: Seq[String]): Route = {
+    val family = IndexFamily.declared(d, vecField)
+    val lsh = family.isInstanceOf[IndexFamily.Lsh]
+    if (searchParams.contains("radius") &&
+        (!lsh || searchParams.contains("range_filter")))
+      return RangeRoute(searchParams("radius").toDouble,
+        searchParams.get("range_filter").map(_.toDouble))
+    val budget = searchParams.get("nprobe")
+      .orElse(searchParams.get("ef"))
+      .orElse(searchParams.get("search_list_size")).map(_.toInt)
+    // The graph def specifically: a hand-built definition can carry two
+    // defs on one field, and its first, non-graph def must not decide.
+    val graph = d.indexes.filter(_.field == vecField).map(IndexFamily.of)
+      .collectFirst { case g: IndexFamily.Graph => g }
+      .filter(_ => !lsh && budget.isDefined &&
+        IndexFamily.graphServed(d, metric))
+    val mask = graph.flatMap(_ =>
+      hnswFilterMask(spark, coll, filterExpr, partitionNames))
+    def served(b: DenseBuild): DataFrame =
+      scoped(IndexStore.serve(spark, coll, vecField, b), partitionNames)
+    def probe(b: DenseBuild): Route = ProbeRoute(b, served(b), budget.get,
+      searchParams.get("refine_k").map(_.toInt).getOrElse(4))
+    family match {
+      case IndexFamily.Lsh(tables, planes, seed) =>
+        val b = IndexStore.ensureLsh(spark, coll, vecField, metric, tables,
+          planes, seed)
+        LshRoute(b, served(b),
+          searchParams.get("radius").map(_.toInt).getOrElse(1))
+      case _ if mask.isDefined => GraphRoute(graph.get, budget.get, mask.get)
+      case f if budget.isEmpty || f.ivfNlist.isEmpty =>
+        // Nullable-vector semantics (3.0 feature-inventory plan §4,
+        // "nullable vector"): rows whose vector is null are not
+        // searchable — and must be dropped BEFORE scoring, because a
+        // null distance would sort FIRST under an ascending L2 order
+        // and pollute the top-k. (The index paths get this for free:
+        // a null vector has a null cell id / code and lands outside
+        // every probed partition.)
+        ExactRoute(coll.read(spark, partitionNames)
+          .filter(col(vecField).isNotNull))
+      case IndexFamily.IvfSq8(nlist) =>
+        probe(IndexStore.ensureSq8(spark, coll, vecField, metric, nlist))
+      case IndexFamily.IvfPq(nlist, m, ksub) =>
+        probe(IndexStore.ensurePq(spark, coll, vecField, metric, nlist, m,
+          ksub))
+      case IndexFamily.IvfRabitq(nlist) =>
+        probe(IndexStore.ensureRabitq(spark, coll, vecField, metric, nlist))
+      case f =>
+        // `_cid` is a physical partition column, so the probe filter
+        // prunes directories at the scan (plus the growing delta when
+        // the build is stale-served, IndexStore.serve).
+        probe(IndexStore.ensureIvf(spark, coll, vecField, metric,
+          f.ivfNlist.get))
+    }
+  }
+
   def search(
       spark: SparkSession,
       coll: Collection,
@@ -202,156 +275,37 @@ object CollectionSearch {
       orderByFields: Seq[String] = Seq.empty): DataFrame = {
     val d = coll.definition
     val pk = d.primaryField.name
-    val index = d.indexes.find(_.field == vecField)
-    // Uppercased at resolution: the index layer's pointer matching is
-    // case-exact, so a lower-case declared metric alternating with the
-    // range/iterator routes' uppercased form would pointer-thrash full
-    // rebuilds.
-    val metric = searchParams.get("metric_type")
-      .orElse(index.flatMap(_.metricType))
-      .getOrElse("COSINE").toUpperCase
-    val rabitqDeclared =
-      index.exists(_.indexType.toUpperCase == "IVF_RABITQ")
-    val sq8Declared =
-      index.exists(_.indexType.toUpperCase == "IVF_SQ8")
-    val pqDeclared =
-      index.exists(_.indexType.toUpperCase == "IVF_PQ")
-    // Declared HNSW serves from the GENUINE per-segment graph family
-    // (see [[hnswGraphRoutable]]): unfiltered directly, filtered via
-    // the allowed-pk bitmask when it fits the cap; over-cap filters
-    // and DISKANN declarations serve from the IVF physical path —
-    // cell-pruned search is the Spark shape whose persisted layout
-    // carries the partition level, the sealed/growing delta discipline
-    // AND the scalar columns inline, with `ef`/`search_list_size`
-    // accepted as the probe budget (workload.py:141-147 maps per-type
-    // search params).
-    val lshDeclared = index.exists(ix =>
-      Set("LSH", "RHP_LSH").contains(ix.indexType.toUpperCase))
-    val probeBudget = searchParams.get("nprobe")
-      .orElse(searchParams.get("ef"))
-      .orElse(searchParams.get("search_list_size"))
-    // pymilvus range semantics ride INSIDE a normal search(): params
-    // carrying `radius` turn the call into a range search capped at
-    // `limit` (best in-band hits first). The LSH family keeps its
-    // multiprobe-budget reading of `radius` UNLESS `range_filter` also
-    // rides along — unambiguously the range form.
-    if (searchParams.contains("radius") &&
-        (!lshDeclared || searchParams.contains("range_filter"))) {
-      val hits = rangeSearchBatch(spark, coll, vecField,
-        Seq(("q", queryVec)), searchParams("radius").toDouble,
-        searchParams.get("range_filter").map(_.toDouble), limit = k,
-        filterExpr, searchParams, outputFields, partitionNames)
-        .drop("qid")
-      return (if (orderByFields.isEmpty) hits
-              else hits.orderBy(orderByFields.map(col): _*))
-    }
-    val hnswMask: Option[Option[Array[Long]]] =
-      if (!hnswGraphRoutable(coll, vecField, metric) || lshDeclared ||
-          probeBudget.isEmpty) None
-      else hnswFilterMask(spark, coll, filterExpr, partitionNames)
-    val hnswRoutable = hnswMask.isDefined
-    val ivfDeclared = !rabitqDeclared && !sq8Declared && !pqDeclared &&
-      !hnswRoutable &&
-      index.exists(ix =>
-        ix.indexType.toUpperCase.startsWith("IVF") ||
-          Set("AUTOINDEX", "HNSW", "DISKANN", "SCANN")
-            .contains(ix.indexType.toUpperCase))
-    // Random-hyperplane LSH declarations serve from the persisted
-    // multi-table bucket layout: the probe predicate prunes (t, sig)
-    // partition directories, `radius` is the multiprobe budget
-    // (radius >= num_planes probes everything = exact).
-    // Persisted IVF-family builds carry `_part` as the OUTER partition
-    // level, so a partition-scoped search stays on the index route and
-    // prunes whole partition subtrees before the probe prunes cells.
-    def scoped(indexDf: DataFrame): DataFrame =
-      if (partitionNames.isEmpty) indexDf
-      else indexDf.filter(col("_part").isin(partitionNames: _*))
-    val hits = if (lshDeclared) {
-      val ix = index.get
-      val build = IndexStore.ensureLsh(spark, coll, vecField, metric,
-        ix.params.get("tables").map(_.toInt).getOrElse(4),
-        ix.params.get("num_planes").map(_.toInt).getOrElse(8),
-        ix.params.get("seed").map(_.toLong).getOrElse(42L))
-      val indexDf = scoped(IndexStore.serveLsh(spark, coll, vecField, build))
-      val pred =
-        if (filterExpr.trim.isEmpty) None
-        else Some(MilvusExpr.compile(filterExpr, indexDf))
-      val radius = searchParams.get("radius").map(_.toInt).getOrElse(1)
-      graft.ann.Lsh.searchOnePersisted(indexDf, build.model, queryVec,
-        vecField, pk, k, radius, pred, outputFields)
-    } else probeBudget.map(_.toInt) match {
-      case Some(ef) if hnswRoutable =>
-        // Graph path: ef is the beam budget (>= a segment's size
-        // switches that segment to its exact fallback).
-        hnswHits(spark, coll, vecField, Seq(("q", queryVec)), k, ef,
-          metric, outputFields, partitionNames, hnswMask.get, filterExpr)
-          .drop("qid")
-      case Some(nprobe) if sq8Declared =>
-        // 8-bit quantized path: ADC estimates over the probed cells'
-        // byte-code column (4x narrower than the float vectors), exact
-        // re-rank of k*refine_k.
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt).getOrElse(16)
-        val refine = searchParams.get("refine_k").map(_.toInt).getOrElse(4)
-        val build = IndexStore.ensureSq8(spark, coll, vecField, metric, nlist)
-        val encoded = scoped(IndexStore.serveSq8(spark, coll, vecField, build))
-        val pred =
-          if (filterExpr.trim.isEmpty) None
-          else Some(MilvusExpr.compile(filterExpr, encoded))
-        Sq8.searchOne(encoded, build.model, queryVec, vecField, pk, k,
-          nprobe, refine, pred, outputFields)
-      case Some(nprobe) if pqDeclared =>
-        // Product-quantized path: m-byte ADC codes, per-(query, cell)
-        // LUTs, exact re-rank of k*refine_k.
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt).getOrElse(16)
-        val refine = searchParams.get("refine_k").map(_.toInt).getOrElse(4)
-        val (m, ksub) = pqShape(index.get)
-        val build = IndexStore.ensurePq(spark, coll, vecField, metric,
-          nlist, m, ksub)
-        val encoded = scoped(IndexStore.servePq(spark, coll, vecField, build))
-        val pred =
-          if (filterExpr.trim.isEmpty) None
-          else Some(MilvusExpr.compile(filterExpr, encoded))
-        graft.ann.Pq.searchOne(encoded, build.model, queryVec, vecField,
-          pk, k, nprobe, refine, pred, outputFields)
-      case Some(nprobe) if rabitqDeclared =>
-        // Quantized path: Hamming-estimate candidates over the probed
-        // cells' narrow code columns, exact re-rank of k*refine_k.
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt).getOrElse(16)
-        val refine = searchParams.get("refine_k").map(_.toInt).getOrElse(4)
-        val build = IndexStore.ensureRabitq(spark, coll, vecField, metric, nlist)
-        val encoded = scoped(IndexStore.serveRabitq(spark, coll, vecField, build))
-        val pred =
-          if (filterExpr.trim.isEmpty) None
-          else Some(MilvusExpr.compile(filterExpr, encoded))
-        RaBitQ.searchOne(encoded, build.model, queryVec, vecField, pk, k,
-          nprobe, refine, metric, pred, outputFields)
-      case Some(nprobe) if ivfDeclared =>
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt).getOrElse(16)
-        val build = IndexStore.ensureIvf(spark, coll, vecField, metric, nlist)
-        // Serve from the persisted build: `_cid` is a physical
-        // partition column, so the probe filter inside Ivf.searchOne
-        // prunes directories at the scan (plus the growing delta when
-        // the build is stale-served, IndexStore.servedDense).
-        val assigned = scoped(IndexStore.serveIvf(spark, coll, vecField, build))
-        val pred =
-          if (filterExpr.trim.isEmpty) None
-          else Some(MilvusExpr.compile(filterExpr, assigned))
-        Ivf.searchOne(assigned, build.model, queryVec, vecField, pk, k,
-          nprobe, pred, outputFields)
-      case _ =>
-        // Nullable-vector semantics (3.0 feature-inventory plan §4,
-        // "nullable vector"): rows whose vector is null are not
-        // searchable — and must be dropped BEFORE scoring, because a
-        // null distance would sort FIRST under an ascending L2 order
-        // and pollute the top-k. (The index paths get this for free:
-        // a null vector has a null cell id / code and lands outside
-        // every probed partition.)
-        val data = coll.read(spark, partitionNames)
-          .filter(col(vecField).isNotNull)
-        val pred =
-          if (filterExpr.trim.isEmpty) None
-          else Some(MilvusExpr.compile(filterExpr, data))
-        Knn.searchOne(data, queryVec, vecField, pk, metric, k, pred, outputFields)
+    val metric = metricOf(d, vecField, searchParams)
+    // ProbeRoute only ever carries the four IVF-family builds.
+    val hits = (resolve(spark, coll, d, vecField, metric, filterExpr,
+        searchParams, partitionNames): @unchecked) match {
+      case RangeRoute(radius, rangeFilter) =>
+        rangeSearchBatch(spark, coll, vecField, Seq(("q", queryVec)), radius,
+          rangeFilter, limit = k, filterExpr, searchParams, outputFields,
+          partitionNames).drop("qid")
+      case LshRoute(b, df, radius) =>
+        Lsh.searchOnePersisted(df, b.model, queryVec, vecField, pk, k,
+          radius, filterOn(filterExpr, df), outputFields)
+      case GraphRoute(graph, ef, mask) =>
+        // ef is the beam budget (>= a segment's size switches that
+        // segment to its exact fallback).
+        hnswHits(spark, coll, vecField, Seq(("q", queryVec)), k, ef, metric,
+          outputFields, partitionNames, graph, mask, filterExpr).drop("qid")
+      case ProbeRoute(b: Sq8Build, df, nprobe, refine) =>
+        Sq8.searchOne(df, b.model, queryVec, vecField, pk, k, nprobe, refine,
+          filterOn(filterExpr, df), outputFields)
+      case ProbeRoute(b: PqBuild, df, nprobe, refine) =>
+        Pq.searchOne(df, b.model, queryVec, vecField, pk, k, nprobe, refine,
+          filterOn(filterExpr, df), outputFields)
+      case ProbeRoute(b: RabitqBuild, df, nprobe, refine) =>
+        RaBitQ.searchOne(df, b.model, queryVec, vecField, pk, k, nprobe,
+          refine, metric, filterOn(filterExpr, df), outputFields)
+      case ProbeRoute(b: IvfBuild, df, nprobe, _) =>
+        Ivf.searchOne(df, b.model, queryVec, vecField, pk, k, nprobe,
+          filterOn(filterExpr, df), outputFields)
+      case ExactRoute(data) =>
+        Knn.searchOne(data, queryVec, vecField, pk, metric, k,
+          filterOn(filterExpr, data), outputFields)
     }
     // Server-side ORDER BY of the search RESULT (3.0 plan §2,
     // "Query/Search server-side ORDER BY"): re-sort the k hits by
@@ -364,14 +318,11 @@ object CollectionSearch {
   /** Batched dense search — the client's nq>1 shape (reference sends
     * nq vectors per call, search_permanently.py:137-189,
     * go_bench/search_horizon_perf_3.go:549-605) as ONE routed Spark
-    * job instead of nq sequential driver loops. Routing mirrors
-    * [[search]]: declared LSH → [[graft.ann.Lsh.searchPersistedBatch]]
-    * over the persisted (t, sig) bucket layout; IVF_SQ8 / IVF_RABITQ /
-    * IVF-family with a probe budget → the index libraries' batched
-    * searches (every probe set ships in one broadcast table, one pass
-    * over the union of probed cells); otherwise exact batched
-    * [[Knn.search]]. Returns (qid, pk, <outputFields>, score) — the
-    * same hits as a per-query [[search]] loop, one job.
+    * job instead of nq sequential driver loops. Routes exactly like
+    * [[search]] ([[resolve]]), then runs each route's batched kernel
+    * (every probe set ships in one broadcast table, one pass over the
+    * union of probed cells). Returns (qid, pk, <outputFields>, score) —
+    * the same hits as a per-query [[search]] loop, one job.
     */
   def searchBatch(
       spark: SparkSession,
@@ -387,118 +338,41 @@ object CollectionSearch {
     require(queryVecs.nonEmpty, "batched search needs at least one query")
     val d = coll.definition
     val pk = d.primaryField.name
-    val index = d.indexes.find(_.field == vecField)
-    // Uppercased at resolution: the index layer's pointer matching is
-    // case-exact, so a lower-case declared metric alternating with the
-    // range/iterator routes' uppercased form would pointer-thrash full
-    // rebuilds.
-    val metric = searchParams.get("metric_type")
-      .orElse(index.flatMap(_.metricType))
-      .getOrElse("COSINE").toUpperCase
-    val rabitqDeclared =
-      index.exists(_.indexType.toUpperCase == "IVF_RABITQ")
-    val sq8Declared =
-      index.exists(_.indexType.toUpperCase == "IVF_SQ8")
-    val pqDeclared =
-      index.exists(_.indexType.toUpperCase == "IVF_PQ")
-    val lshDeclared = index.exists(ix =>
-      Set("LSH", "RHP_LSH").contains(ix.indexType.toUpperCase))
-    // Range params inside a batched search route exactly like the
-    // single-query form (see [[search]]) — one range job, capped per
-    // query.
-    if (searchParams.contains("radius") &&
-        (!lshDeclared || searchParams.contains("range_filter")))
-      return rangeSearchBatch(spark, coll, vecField, queryVecs,
-        searchParams("radius").toDouble,
-        searchParams.get("range_filter").map(_.toDouble), limit = k,
-        filterExpr, searchParams, outputFields, partitionNames)
-        .select((col("qid") +: (pk +: outputFields).distinct.map(col)) :+
-          col("score"): _*)
-    val probeBudget = searchParams.get("nprobe")
-      .orElse(searchParams.get("ef"))
-      .orElse(searchParams.get("search_list_size"))
-    val hnswMask: Option[Option[Array[Long]]] =
-      if (!hnswGraphRoutable(coll, vecField, metric) || lshDeclared ||
-          probeBudget.isEmpty) None
-      else hnswFilterMask(spark, coll, filterExpr, partitionNames)
-    val hnswRoutable = hnswMask.isDefined
-    val ivfDeclared = !rabitqDeclared && !sq8Declared && !pqDeclared &&
-      !hnswRoutable &&
-      index.exists(ix =>
-        ix.indexType.toUpperCase.startsWith("IVF") ||
-          Set("AUTOINDEX", "HNSW", "DISKANN", "SCANN")
-            .contains(ix.indexType.toUpperCase))
-    val doubleQs = queryVecs.map { case (qid, qv) =>
+    val metric = metricOf(d, vecField, searchParams)
+    lazy val doubleQs = queryVecs.map { case (qid, qv) =>
       (qid, qv.map(_.toDouble).toArray)
     }
-    val outSel =
-      (col("qid") +: (pk +: outputFields).distinct.map(col)) :+ col("score")
-    def pred(df: DataFrame) =
-      if (filterExpr.trim.isEmpty) None
-      else Some(MilvusExpr.compile(filterExpr, df))
-    // Every persisted vector index (IVF family AND the LSH bucket
-    // layout) carries `_part` as the outer partition level (see
-    // [[search]]).
-    def scoped(indexDf: DataFrame): DataFrame =
-      if (partitionNames.isEmpty) indexDf
-      else indexDf.filter(col("_part").isin(partitionNames: _*))
-    val hits = if (lshDeclared) {
-      val ix = index.get
-      val build = IndexStore.ensureLsh(spark, coll, vecField, metric,
-        ix.params.get("tables").map(_.toInt).getOrElse(4),
-        ix.params.get("num_planes").map(_.toInt).getOrElse(8),
-        ix.params.get("seed").map(_.toLong).getOrElse(42L))
-      val indexDf = scoped(IndexStore.serveLsh(spark, coll, vecField, build))
-      val radius = searchParams.get("radius").map(_.toInt).getOrElse(1)
-      graft.ann.Lsh.searchPersistedBatch(indexDf, build.model, queryVecs,
-        vecField, pk, k, radius, pred(indexDf), outputFields)
-    } else probeBudget.map(_.toInt) match {
-      case Some(ef) if hnswRoutable =>
+    // ProbeRoute only ever carries the four IVF-family builds.
+    val hits = (resolve(spark, coll, d, vecField, metric, filterExpr,
+        searchParams, partitionNames): @unchecked) match {
+      case RangeRoute(radius, rangeFilter) =>
+        rangeSearchBatch(spark, coll, vecField, queryVecs, radius,
+          rangeFilter, limit = k, filterExpr, searchParams, outputFields,
+          partitionNames)
+      case LshRoute(b, df, radius) =>
+        Lsh.searchPersistedBatch(df, b.model, queryVecs, vecField, pk, k,
+          radius, filterOn(filterExpr, df), outputFields)
+      case GraphRoute(graph, ef, mask) =>
         hnswHits(spark, coll, vecField, queryVecs, k, ef, metric,
-          outputFields, partitionNames, hnswMask.get, filterExpr)
-      case Some(nprobe) if sq8Declared =>
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt)
-          .getOrElse(16)
-        val refine = searchParams.get("refine_k").map(_.toInt).getOrElse(4)
-        val build = IndexStore.ensureSq8(spark, coll, vecField, metric, nlist)
-        val encoded = scoped(IndexStore.serveSq8(spark, coll, vecField, build))
-        Sq8.search(encoded, build.model, doubleQs, vecField, pk, k,
-          nprobe, refine, pred(encoded), outputFields)
-      case Some(nprobe) if pqDeclared =>
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt)
-          .getOrElse(16)
-        val refine = searchParams.get("refine_k").map(_.toInt).getOrElse(4)
-        val (m, ksub) = pqShape(index.get)
-        val build = IndexStore.ensurePq(spark, coll, vecField, metric,
-          nlist, m, ksub)
-        val encoded = scoped(IndexStore.servePq(spark, coll, vecField, build))
-        graft.ann.Pq.search(encoded, build.model, doubleQs, vecField, pk,
-          k, nprobe, refine, pred(encoded), outputFields)
-      case Some(nprobe) if rabitqDeclared =>
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt)
-          .getOrElse(16)
-        val refine = searchParams.get("refine_k").map(_.toInt).getOrElse(4)
-        val build = IndexStore.ensureRabitq(spark, coll, vecField, metric,
-          nlist)
-        val encoded = scoped(IndexStore.serveRabitq(spark, coll, vecField, build))
-        RaBitQ.search(encoded, build.model, doubleQs, vecField, pk, k,
-          nprobe, refine, metric, pred(encoded), outputFields)
-      case Some(nprobe) if ivfDeclared =>
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt)
-          .getOrElse(16)
-        val build = IndexStore.ensureIvf(spark, coll, vecField, metric, nlist)
-        val assigned = scoped(IndexStore.serveIvf(spark, coll, vecField, build))
-        val qdf = queryVecs.toDF("qid", "qvec")
-        Ivf.search(assigned, build.model, qdf, vecField, pk, k, nprobe,
-          pred(assigned), outputFields)
-      case _ =>
-        val data = coll.read(spark, partitionNames)
-          .filter(col(vecField).isNotNull)
-        val qdf = queryVecs.toDF("qid", "qvec")
-        Knn.search(data, qdf, vecField, pk, metric, k, pred(data),
-          outputCols = outputFields)
+          outputFields, partitionNames, graph, mask, filterExpr)
+      case ProbeRoute(b: Sq8Build, df, nprobe, refine) =>
+        Sq8.search(df, b.model, doubleQs, vecField, pk, k, nprobe, refine,
+          filterOn(filterExpr, df), outputFields)
+      case ProbeRoute(b: PqBuild, df, nprobe, refine) =>
+        Pq.search(df, b.model, doubleQs, vecField, pk, k, nprobe, refine,
+          filterOn(filterExpr, df), outputFields)
+      case ProbeRoute(b: RabitqBuild, df, nprobe, refine) =>
+        RaBitQ.search(df, b.model, doubleQs, vecField, pk, k, nprobe,
+          refine, metric, filterOn(filterExpr, df), outputFields)
+      case ProbeRoute(b: IvfBuild, df, nprobe, _) =>
+        Ivf.search(df, b.model, queryVecs.toDF("qid", "qvec"), vecField, pk,
+          k, nprobe, filterOn(filterExpr, df), outputFields)
+      case ExactRoute(data) =>
+        Knn.search(data, queryVecs.toDF("qid", "qvec"), vecField, pk, metric,
+          k, filterOn(filterExpr, data), outputCols = outputFields)
     }
-    hits.select(outSel: _*)
+    hits.select((col("qid") +: (pk +: outputFields).distinct.map(col)) :+
+      col("score"): _*)
   }
 
   /** Resolve a Milvus filter against the sparse postings frame:
@@ -527,6 +401,23 @@ object CollectionSearch {
     }
   }
 
+  /** The declared sparse index on `vecField`, if any. */
+  private def sparseFamily(d: CollectionDef,
+      vecField: String): Option[IndexFamily.Sparse] =
+    d.indexes.filter(_.field == vecField).map(IndexFamily.of)
+      .collectFirst { case s: IndexFamily.Sparse => s }
+
+  /** The served postings of sparse index `s`, partition-scoped (the
+    * postings carry `_part` like the dense family) and filtered.
+    */
+  private def sparsePostings(spark: SparkSession, coll: Collection,
+      vecField: String, s: IndexFamily.Sparse, filterExpr: String,
+      partitionNames: Seq[String]): (IndexStore.SparseServe, DataFrame) = {
+    val serve = IndexStore.serveSparse(spark, coll, vecField, s.buckets)
+    (serve, sparseFilteredPostings(spark, coll,
+      scoped(serve.postings, partitionNames), filterExpr, partitionNames))
+  }
+
   /** Sparse-vector search (map<int,double> field). With a declared
     * SPARSE_INVERTED_INDEX / SPARSE_WAND the query joins ONLY its
     * dimensions' persisted posting buckets (exact IP over overlapping
@@ -544,22 +435,11 @@ object CollectionSearch {
       partitionNames: Seq[String] = Seq.empty): DataFrame = {
     val d = coll.definition
     val pk = d.primaryField.name
-    val sparseIx = d.indexes.find(ix => ix.field == vecField &&
-      Set("SPARSE_INVERTED_INDEX", "SPARSE_WAND")
-        .contains(ix.indexType.toUpperCase))
-    // Persisted sparse postings carry `_part` like the dense family,
-    // so a partition-scoped search stays on the index route.
-    def scoped(indexDf: DataFrame): DataFrame =
-      if (partitionNames.isEmpty) indexDf
-      else indexDf.filter(col("_part").isin(partitionNames: _*))
-    if (sparseIx.isDefined) {
-      val buckets = sparseIx.flatMap(_.params.get("buckets"))
-        .map(_.toInt).getOrElse(64)
-      val serve = IndexStore.serveSparse(spark, coll, vecField, buckets)
-      val postings = sparseFilteredPostings(spark, coll,
-        scoped(serve.postings), filterExpr, partitionNames)
-      if (sparseIx.exists(_.indexType.toUpperCase == "SPARSE_WAND") &&
-          !serve.deltaServed) {
+    val sparseIx = sparseFamily(d, vecField)
+    sparseIx.map { s =>
+      val (serve, postings) = sparsePostings(spark, coll, vecField, s,
+        filterExpr, partitionNames)
+      if (s.wand && !serve.deltaServed) {
         // Max-score/WAND pruning from the persisted per-dim impact
         // stats (collected once per build, cached driver-side) —
         // exact, with automatic fallback when the bounds cannot
@@ -573,12 +453,10 @@ object CollectionSearch {
         SparseInverted.search(postings, query, pk, k,
           serve.build.numBuckets, None)
       }
-    } else {
+    }.getOrElse {
       val data = coll.read(spark, partitionNames)
-      val pred =
-        if (filterExpr.trim.isEmpty) None
-        else Some(MilvusExpr.compile(filterExpr, data))
-      Knn.searchOneSparse(data, query, vecField, pk, k, pred)
+      Knn.searchOneSparse(data, query, vecField, pk, k,
+        filterOn(filterExpr, data))
     }
   }
 
@@ -604,27 +482,17 @@ object CollectionSearch {
     import spark.implicits._
     val d = coll.definition
     val pk = d.primaryField.name
-    val sparseIx = d.indexes.find(ix => ix.field == vecField &&
-      Set("SPARSE_INVERTED_INDEX", "SPARSE_WAND")
-        .contains(ix.indexType.toUpperCase))
-    def scoped(indexDf: DataFrame): DataFrame =
-      if (partitionNames.isEmpty) indexDf
-      else indexDf.filter(col("_part").isin(partitionNames: _*))
+    val sparseIx = sparseFamily(d, vecField)
     val hits =
       if (sparseIx.isDefined && radius >= 0) {
-        val buckets = sparseIx.flatMap(_.params.get("buckets"))
-          .map(_.toInt).getOrElse(64)
-        val serve = IndexStore.serveSparse(spark, coll, vecField, buckets)
-        val postings = sparseFilteredPostings(spark, coll,
-          scoped(serve.postings), filterExpr, partitionNames)
+        val (serve, postings) = sparsePostings(spark, coll, vecField,
+          sparseIx.get, filterExpr, partitionNames)
         SparseInverted.rangeSearch(postings, query, pk, radius,
           rangeFilter, serve.build.numBuckets, None)
       } else {
         val data = coll.read(spark, partitionNames)
           .filter(col(vecField).isNotNull)
-        val pred =
-          if (filterExpr.trim.isEmpty) None
-          else Some(MilvusExpr.compile(filterExpr, data))
+        val pred = filterOn(filterExpr, data)
         val qdf = Seq(Tuple1(query)).toDF("qvec")
         val (score, _) = graft.Functions.metricFor("IP",
           data.schema(vecField).dataType, col(vecField), col("qvec"))
@@ -662,20 +530,11 @@ object CollectionSearch {
       partitionNames: Seq[String] = Seq.empty): DataFrame = {
     val d = coll.definition
     val pk = d.primaryField.name
-    val sparseIx = d.indexes.find(ix => ix.field == vecField &&
-      Set("SPARSE_INVERTED_INDEX", "SPARSE_WAND")
-        .contains(ix.indexType.toUpperCase))
-    def scoped(indexDf: DataFrame): DataFrame =
-      if (partitionNames.isEmpty) indexDf
-      else indexDf.filter(col("_part").isin(partitionNames: _*))
-    if (sparseIx.isDefined) {
-      val buckets = sparseIx.flatMap(_.params.get("buckets"))
-        .map(_.toInt).getOrElse(64)
-      val serve = IndexStore.serveSparse(spark, coll, vecField, buckets)
-      val postings = sparseFilteredPostings(spark, coll,
-        scoped(serve.postings), filterExpr, partitionNames)
-      if (sparseIx.exists(_.indexType.toUpperCase == "SPARSE_WAND") &&
-          !serve.deltaServed) {
+    val sparseIx = sparseFamily(d, vecField)
+    sparseIx.map { s =>
+      val (serve, postings) = sparsePostings(spark, coll, vecField, s,
+        filterExpr, partitionNames)
+      if (s.wand && !serve.deltaServed) {
         // Global per-dim bounds remain VALID (conservative) for any
         // partition-scoped or filtered subset — the prune may keep
         // more candidates, the exact aggregation result is unchanged.
@@ -688,16 +547,14 @@ object CollectionSearch {
         SparseInverted.searchBatch(postings, queries, pk, k,
           serve.build.numBuckets, None)
       }
-    } else {
+    }.getOrElse {
       // No declared index: explode the live rows into transient
       // postings for this one job — same plan shape, no persist.
       val buckets = 64
       val postings = SparseInverted.postings(
         coll.read(spark, partitionNames), vecField, pk, buckets)
-      val pred =
-        if (filterExpr.trim.isEmpty) None
-        else Some(MilvusExpr.compile(filterExpr, postings))
-      SparseInverted.searchBatch(postings, queries, pk, k, buckets, pred)
+      SparseInverted.searchBatch(postings, queries, pk, k, buckets,
+        filterOn(filterExpr, postings))
     }
   }
 
@@ -721,36 +578,21 @@ object CollectionSearch {
       partitionNames: Seq[String] = Seq.empty): DataFrame = {
     val d = coll.definition
     val pk = d.primaryField.name
-    val index = d.indexes.find(_.field == vecField)
-    val binIvfDeclared =
-      index.exists(_.indexType.toUpperCase == "BIN_IVF_FLAT")
-    // Persisted BIN_IVF builds carry `_part` like the dense family, so
-    // a partition-scoped search stays on the index route (see [[search]]).
-    def scoped(indexDf: DataFrame): DataFrame =
-      if (partitionNames.isEmpty) indexDf
-      else indexDf.filter(col("_part").isin(partitionNames: _*))
-    if (binIvfDeclared) {
-      val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt)
-        .getOrElse(16)
-      val nprobe = searchParams.get("nprobe").map(_.toInt).getOrElse(4)
-      val build = IndexStore.ensureBinIvf(spark, coll, vecField, nlist)
-      val assigned =
-        scoped(IndexStore.serveBinIvf(spark, coll, vecField, build))
-      val pred =
-        if (filterExpr.trim.isEmpty) None
-        else Some(MilvusExpr.compile(filterExpr, assigned))
-      BinIvf.searchOne(assigned, build.model, queryBytes, vecField, pk, k,
-        nprobe, pred, outputFields)
-    } else {
-      // Null binary vectors drop before scoring: hammingDistance(null)
-      // is null and NULLS FIRST under asc would fill the top-k.
-      val data = coll.read(spark, partitionNames)
-        .filter(col(vecField).isNotNull)
-      val pred =
-        if (filterExpr.trim.isEmpty) None
-        else Some(MilvusExpr.compile(filterExpr, data))
-      Knn.searchOneBinary(data, queryBytes, vecField, pk, k, pred,
-        outputFields)
+    IndexFamily.declared(d, vecField) match {
+      case IndexFamily.BinIvfFlat(nlist) =>
+        val nprobe = searchParams.get("nprobe").map(_.toInt).getOrElse(4)
+        val build = IndexStore.ensureBinIvf(spark, coll, vecField, nlist)
+        val assigned = scoped(IndexStore.serve(spark, coll, vecField, build),
+          partitionNames)
+        BinIvf.searchOne(assigned, build.model, queryBytes, vecField, pk, k,
+          nprobe, filterOn(filterExpr, assigned), outputFields)
+      case _ =>
+        // Null binary vectors drop before scoring: hammingDistance(null)
+        // is null and NULLS FIRST under asc would fill the top-k.
+        val data = coll.read(spark, partitionNames)
+          .filter(col(vecField).isNotNull)
+        Knn.searchOneBinary(data, queryBytes, vecField, pk, k,
+          filterOn(filterExpr, data), outputFields)
     }
   }
 
@@ -778,17 +620,12 @@ object CollectionSearch {
     import spark.implicits._
     val d = coll.definition
     val pk = d.primaryField.name
-    val metric = searchParams.get("metric_type")
-      .orElse(d.indexes.find(_.field == vecField).flatMap(_.metricType))
-      .getOrElse("COSINE").toUpperCase
     val data = coll.read(spark, partitionNames)
       .filter(col(vecField).isNotNull)
-    val pred =
-      if (filterExpr.trim.isEmpty) None
-      else Some(MilvusExpr.compile(filterExpr, data))
     val q = Seq(("q0", queryVec)).toDF("qid", "qvec")
-    Knn.searchGroupByMulti(data, q, vecField, pk, groupByFields, metric,
-      k, pred, outputFields, groupSize).drop("qid")
+    Knn.searchGroupByMulti(data, q, vecField, pk, groupByFields,
+      metricOf(d, vecField, searchParams), k, filterOn(filterExpr, data),
+      outputFields, groupSize).drop("qid")
   }
 
   /** Batched binary-vector search — the nq>1 Hamming client shape as
@@ -813,40 +650,30 @@ object CollectionSearch {
     require(queries.nonEmpty, "batched search needs at least one query")
     val d = coll.definition
     val pk = d.primaryField.name
-    val index = d.indexes.find(_.field == vecField)
-    val binIvfDeclared =
-      index.exists(_.indexType.toUpperCase == "BIN_IVF_FLAT")
     val outSel =
       (col("qid") +: (pk +: outputFields).distinct.map(col)) :+ col("score")
-    if (binIvfDeclared) {
-      val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt)
-        .getOrElse(16)
-      val nprobe = searchParams.get("nprobe").map(_.toInt).getOrElse(4)
-      val build = IndexStore.ensureBinIvf(spark, coll, vecField, nlist)
-      val served = IndexStore.serveBinIvf(spark, coll, vecField, build)
-      val assigned =
-        if (partitionNames.isEmpty) served
-        else served.filter(col("_part").isin(partitionNames: _*))
-      val pred =
-        if (filterExpr.trim.isEmpty) None
-        else Some(MilvusExpr.compile(filterExpr, assigned))
-      BinIvf.search(assigned, build.model, queries, vecField, pk, k,
-        nprobe, pred, outputFields).select(outSel: _*)
-    } else {
-      // Null binary vectors drop before scoring (see searchBinary).
-      val data = coll.read(spark, partitionNames)
-        .filter(col(vecField).isNotNull)
-      val pred =
-        if (filterExpr.trim.isEmpty) None
-        else Some(MilvusExpr.compile(filterExpr, data))
-      val qdf = queries.toDF("qid", "_qbytes")
-      val scored = pred.foldLeft(data)(_ filter _)
-        .crossJoin(broadcast(qdf))
-        .select((col("qid") +: (pk +: outputFields).distinct.map(col)) :+
-          graft.Functions.hammingDistance(col(vecField), col("_qbytes"))
-            .as("score"): _*)
-      Knn.limitPerQid(scored, "qid", Seq(col("score").asc, col(pk).asc), k)
-        .select(outSel: _*)
+    IndexFamily.declared(d, vecField) match {
+      case IndexFamily.BinIvfFlat(nlist) =>
+        val nprobe = searchParams.get("nprobe").map(_.toInt).getOrElse(4)
+        val build = IndexStore.ensureBinIvf(spark, coll, vecField, nlist)
+        val assigned = scoped(IndexStore.serve(spark, coll, vecField, build),
+          partitionNames)
+        BinIvf.search(assigned, build.model, queries, vecField, pk, k,
+          nprobe, filterOn(filterExpr, assigned), outputFields)
+          .select(outSel: _*)
+      case _ =>
+        // Null binary vectors drop before scoring (see searchBinary).
+        val data = coll.read(spark, partitionNames)
+          .filter(col(vecField).isNotNull)
+        val pred = filterOn(filterExpr, data)
+        val qdf = queries.toDF("qid", "_qbytes")
+        val scored = pred.foldLeft(data)(_ filter _)
+          .crossJoin(broadcast(qdf))
+          .select((col("qid") +: (pk +: outputFields).distinct.map(col)) :+
+            graft.Functions.hammingDistance(col(vecField), col("_qbytes"))
+              .as("score"): _*)
+        Knn.limitPerQid(scored, "qid", Seq(col("score").asc, col(pk).asc), k)
+          .select(outSel: _*)
     }
   }
 
@@ -1006,6 +833,23 @@ object CollectionSearch {
       outputFields = outputFields)
   }
 
+  /** The IVF build serving the exact bounded routes (range search, the
+    * search iterator): every dense ANN declaration under a true metric
+    * (the triangle-inequality cell bounds need one; FLAT declares brute
+    * force) — with its sealed ⊎ growing split and per-cell bounds.
+    * Bounds are lazy since round 12: the first bounded query over a
+    * build computes and persists them (one column-pruned pass).
+    */
+  private def boundedIvf(spark: SparkSession, coll: Collection,
+      d: CollectionDef, vecField: String, metric: String
+  ): Option[(IvfBuild, IndexStore.DenseSplit, Ivf.CellBounds)] =
+    IndexFamily.declared(d, vecField).ivfNlist
+      .filter(_ => Set("L2", "COSINE", "IP").contains(metric)).map { nlist =>
+        val b = IndexStore.ensureIvf(spark, coll, vecField, metric, nlist)
+        (b, IndexStore.serveDenseSplit(spark, coll, vecField, b.dataPath,
+          b.builtSeq), IndexStore.ivfBounds(spark, b, vecField))
+      }
+
   /** Index-aware RANGE search (reference surface: `radius` +
     * `range_filter` in search params, validators.py's range assertions;
     * Milvus bound semantics — L2: range_filter <= d < radius;
@@ -1063,24 +907,9 @@ object CollectionSearch {
     import spark.implicits._
     val d = coll.definition
     val pk = d.primaryField.name
-    val index = d.indexes.find(_.field == vecField)
-    val metric = searchParams.get("metric_type")
-      .orElse(index.flatMap(_.metricType))
-      .getOrElse("COSINE")
-    // FLAT declares brute force by definition; everything else dense
-    // routes through the cell-pruned exact path when the metric is a
-    // true metric (the triangle-inequality bound needs one).
-    val denseDeclared = index.exists(ix =>
-      ix.indexType.toUpperCase.startsWith("IVF") ||
-        Set("AUTOINDEX", "HNSW", "DISKANN", "SCANN")
-          .contains(ix.indexType.toUpperCase))
-    def scopedPart(df: DataFrame): DataFrame =
-      if (partitionNames.isEmpty || !df.columns.contains("_part")) df
-      else df.filter(col("_part").isin(partitionNames: _*))
+    val metric = metricOf(d, vecField, searchParams)
     def bruteRange(data: DataFrame): DataFrame = {
-      val pred =
-        if (filterExpr.trim.isEmpty) None
-        else Some(MilvusExpr.compile(filterExpr, data))
+      val pred = filterOn(filterExpr, data)
       val filtered = pred.map(data.filter).getOrElse(data)
       val qdf = queries.map { case (q, v) => (q, v.map(_.toDouble)) }
         .toDF("qid", "qvec")
@@ -1098,23 +927,11 @@ object CollectionSearch {
         .select((col("qid") +: cols) :+ score.as("score"): _*)
         .filter(keep)
     }
-    val m = metric.toUpperCase
-    val hits =
-      if (denseDeclared && Set("L2", "COSINE", "IP").contains(m)) {
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt)
-          .getOrElse(16)
-        val b = IndexStore.ensureIvf(spark, coll, vecField, m, nlist)
-        val split = IndexStore.serveDenseSplit(spark, coll, vecField,
-          b.dataPath, b.builtSeq)
-        val sealedScoped = scopedPart(split.sealedRows)
-        val predS =
-          if (filterExpr.trim.isEmpty) None
-          else Some(MilvusExpr.compile(filterExpr, sealedScoped))
-        // Bounds are lazy since round 12: the first bounded query over
-        // a build computes and persists them (one column-pruned pass);
-        // afterwards they load with the build.
-        val cb = IndexStore.ivfBounds(spark, b, vecField)
-        val sealedHits = m match {
+    val hits = boundedIvf(spark, coll, d, vecField, metric).map {
+      case (b, split, cb) =>
+        val sealedScoped = scoped(split.sealedRows, partitionNames)
+        val predS = filterOn(filterExpr, sealedScoped)
+        val sealedHits = metric match {
           case "L2" =>
             Ivf.rangeSearch(sealedScoped, b.model,
               cb.radii, queries, vecField, pk, radius,
@@ -1128,11 +945,9 @@ object CollectionSearch {
               cb, queries, vecField, pk,
               radius, rangeFilter, predS, outputFields)
         }
-        split.growing match {
-          case None => sealedHits
-          case Some(g) => sealedHits.unionByName(bruteRange(scopedPart(g)))
-        }
-      } else bruteRange(coll.read(spark, partitionNames))
+        split.growing.fold(sealedHits)(g =>
+          sealedHits.unionByName(bruteRange(scoped(g, partitionNames))))
+    }.getOrElse(bruteRange(coll.read(spark, partitionNames)))
     if (limit == Int.MaxValue) hits
     else {
       val simLike = simLikeMetric(metric)
@@ -1207,19 +1022,8 @@ object CollectionSearch {
     import spark.implicits._
     val d = coll.definition
     val pk = d.primaryField.name
-    val index = d.indexes.find(_.field == vecField)
-    val metric = searchParams.get("metric_type")
-      .orElse(index.flatMap(_.metricType))
-      .getOrElse("COSINE")
-    val m = metric.toUpperCase
+    val m = metricOf(d, vecField, searchParams)
     val simLike = simLikeMetric(m)
-    val denseDeclared = index.exists(ix =>
-      ix.indexType.toUpperCase.startsWith("IVF") ||
-        Set("AUTOINDEX", "HNSW", "DISKANN", "SCANN")
-          .contains(ix.indexType.toUpperCase))
-    def scopedPart(df: DataFrame): DataFrame =
-      if (partitionNames.isEmpty || !df.columns.contains("_part")) df
-      else df.filter(col("_part").isin(partitionNames: _*))
     def keyset(scored: DataFrame): DataFrame = after match {
       case None => scored
       case Some((s0, p0)) =>
@@ -1245,9 +1049,7 @@ object CollectionSearch {
       (outer.toSeq ++ inner.toSeq).foldLeft(df)(_ filter _)
     }
     def score(data: DataFrame): DataFrame = {
-      val pred =
-        if (filterExpr.trim.isEmpty) None
-        else Some(MilvusExpr.compile(filterExpr, data))
+      val pred = filterOn(filterExpr, data)
       val qdf = Seq(("q", queryVec.map(_.toDouble))).toDF("qid", "qvec")
       val (sc, _) = graft.Functions.metricFor(m,
         data.schema(vecField).dataType, col(vecField), col("qvec"))
@@ -1256,13 +1058,8 @@ object CollectionSearch {
         .crossJoin(broadcast(qdf))
         .select((col("qid") +: cols) :+ sc.as("score"): _*))
     }
-    val scored =
-      if (denseDeclared && Set("L2", "COSINE", "IP").contains(m)) {
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt)
-          .getOrElse(16)
-        val b = IndexStore.ensureIvf(spark, coll, vecField, m, nlist)
-        val split = IndexStore.serveDenseSplit(spark, coll, vecField,
-          b.dataPath, b.builtSeq)
+    val scored = boundedIvf(spark, coll, d, vecField, m).map {
+      case (b, split, cb) =>
         // Cursor lower-bound prune (slack keeps it strictly
         // conservative against driver-vs-codegen ulp drift).
         val q = queryVec.map(_.toDouble).toArray
@@ -1285,14 +1082,11 @@ object CollectionSearch {
           while (j < n) { val x = q(j) - c(j); s += x * x; j += 1 }
           math.sqrt(s)
         }
-        // Bounds are lazy since round 12: the first bounded query over
-        // a build computes and persists them (one column-pruned pass).
-        val cb = IndexStore.ivfBounds(spark, b, vecField)
         def sealedScored(cells: Seq[Int]): DataFrame =
-          score(scopedPart(split.sealedRows)
+          score(scoped(split.sealedRows, partitionNames)
             .filter(col("_cid").isin(cells: _*)))
         val growingScored: Option[DataFrame] =
-          split.growing.map(g => score(scopedPart(g)))
+          split.growing.map(g => score(scoped(g, partitionNames)))
         def withGrowing(sealed0: DataFrame): DataFrame =
           growingScored.fold(sealed0)(sealed0.unionByName(_))
         val qn = math.sqrt(q.map(v => v * v).sum)
@@ -1392,11 +1186,27 @@ object CollectionSearch {
               }
             withGrowing(probeTop.unionByName(sealedScored(rest)))
         }
-      } else score(coll.read(spark, partitionNames))
+    }.getOrElse(score(coll.read(spark, partitionNames)))
     val primary = if (simLike) col("score").desc else col("score").asc
     Knn.limitPerQid(keyset(scored), "qid", Seq(primary, col(pk).asc),
       batchSize).drop("qid", "rank")
   }
+
+  /** The BIN_IVF_FLAT build serving the exact bounded binary routes,
+    * with its lazily computed per-cell Hamming radii and sealed ⊎
+    * growing split.
+    */
+  private def boundedBinIvf(spark: SparkSession, coll: Collection,
+      d: CollectionDef, vecField: String
+  ): Option[(IndexStore.BinIvfBuild, Array[Long], IndexStore.DenseSplit)] =
+    IndexFamily.declared(d, vecField) match {
+      case IndexFamily.BinIvfFlat(nlist) =>
+        val b = IndexStore.ensureBinIvf(spark, coll, vecField, nlist)
+        Some((b, IndexStore.binIvfRadii(spark, b, vecField),
+          IndexStore.serveDenseSplit(spark, coll, vecField, b.dataPath,
+            b.builtSeq)))
+      case _ => None
+    }
 
   /** BINARY range search (Hamming bounds, the L2 direction:
     * `range_filter <= d < radius`): with a declared BIN_IVF_FLAT the
@@ -1420,16 +1230,8 @@ object CollectionSearch {
     import spark.implicits._
     val d = coll.definition
     val pk = d.primaryField.name
-    val index = d.indexes.find(_.field == vecField)
-    val binIvfDeclared =
-      index.exists(_.indexType.toUpperCase == "BIN_IVF_FLAT")
-    def scopedPart(df: DataFrame): DataFrame =
-      if (partitionNames.isEmpty || !df.columns.contains("_part")) df
-      else df.filter(col("_part").isin(partitionNames: _*))
     def bruteRange(data: DataFrame): DataFrame = {
-      val pred =
-        if (filterExpr.trim.isEmpty) None
-        else Some(MilvusExpr.compile(filterExpr, data))
+      val pred = filterOn(filterExpr, data)
       val qdf = queries.toDF("qid", "_qbytes")
       val cols = (pk +: outputFields).distinct.map(col)
       pred.foldLeft(data)(_ filter _)
@@ -1440,26 +1242,15 @@ object CollectionSearch {
         .filter(col("score") < lit(radius) &&
           rangeFilter.map(f => col("score") >= lit(f)).getOrElse(lit(true)))
     }
-    val hits =
-      if (binIvfDeclared) {
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt)
-          .getOrElse(16)
-        val b = IndexStore.ensureBinIvf(spark, coll, vecField, nlist)
-        // Lazy since round 12: first bounded query computes + persists.
-        val radii = IndexStore.binIvfRadii(spark, b, vecField)
-        val split = IndexStore.serveDenseSplit(spark, coll, vecField,
-          b.dataPath, b.builtSeq)
-        val sealedScoped = scopedPart(split.sealedRows)
-        val predS =
-          if (filterExpr.trim.isEmpty) None
-          else Some(MilvusExpr.compile(filterExpr, sealedScoped))
+    val hits = boundedBinIvf(spark, coll, d, vecField).map {
+      case (b, radii, split) =>
+        val sealedScoped = scoped(split.sealedRows, partitionNames)
+        val predS = filterOn(filterExpr, sealedScoped)
         val sealedHits = BinIvf.rangeSearch(sealedScoped, b.model, radii,
           queries, vecField, pk, radius, rangeFilter, predS, outputFields)
-        split.growing match {
-          case None => sealedHits
-          case Some(g) => sealedHits.unionByName(bruteRange(scopedPart(g)))
-        }
-      } else bruteRange(coll.read(spark, partitionNames))
+        split.growing.fold(sealedHits)(g =>
+          sealedHits.unionByName(bruteRange(scoped(g, partitionNames))))
+    }.getOrElse(bruteRange(coll.read(spark, partitionNames)))
     if (limit == Int.MaxValue) hits
     else Knn.limitPerQid(hits, "qid", Seq(col("score").asc, col(pk).asc),
       limit).drop("rank")
@@ -1491,12 +1282,6 @@ object CollectionSearch {
     import spark.implicits._
     val d = coll.definition
     val pk = d.primaryField.name
-    val index = d.indexes.find(_.field == vecField)
-    val binIvfDeclared =
-      index.exists(_.indexType.toUpperCase == "BIN_IVF_FLAT")
-    def scopedPart(df: DataFrame): DataFrame =
-      if (partitionNames.isEmpty || !df.columns.contains("_part")) df
-      else df.filter(col("_part").isin(partitionNames: _*))
     def keyset(scored: DataFrame): DataFrame = after match {
       case None => scored
       case Some((s0, p0)) =>
@@ -1513,9 +1298,7 @@ object CollectionSearch {
         rangeFilter.map(f => col("score") >= lit(f)).toSeq)
         .foldLeft(df)(_ filter _)
     def score(data: DataFrame): DataFrame = {
-      val pred =
-        if (filterExpr.trim.isEmpty) None
-        else Some(MilvusExpr.compile(filterExpr, data))
+      val pred = filterOn(filterExpr, data)
       val qdf = Seq(("q", queryBytes)).toDF("qid", "_qbytes")
       val cols = (pk +: outputFields).distinct.map(col)
       band(pred.foldLeft(data.filter(col(vecField).isNotNull))(_ filter _)
@@ -1524,14 +1307,8 @@ object CollectionSearch {
           graft.Functions.hammingDistance(col(vecField), col("_qbytes"))
             .cast("double").as("score"): _*))
     }
-    val scored =
-      if (binIvfDeclared) {
-        val nlist = index.flatMap(_.params.get("nlist")).map(_.toInt)
-          .getOrElse(16)
-        val b = IndexStore.ensureBinIvf(spark, coll, vecField, nlist)
-        val radii = IndexStore.binIvfRadii(spark, b, vecField)
-        val split = IndexStore.serveDenseSplit(spark, coll, vecField,
-          b.dataPath, b.builtSeq)
+    val scored = boundedBinIvf(spark, coll, d, vecField).map {
+      case (b, radii, split) =>
         def qc(i: Int): Long = {
           val c = b.model.centroids(i)
           var s = 0L; var j = 0
@@ -1543,10 +1320,10 @@ object CollectionSearch {
           s
         }
         def sealedScored(cells: Seq[Int]): DataFrame =
-          score(scopedPart(split.sealedRows)
+          score(scoped(split.sealedRows, partitionNames)
             .filter(col(BinIvf.CID).isin(cells: _*)))
         val growingScored: Option[DataFrame] =
-          split.growing.map(g => score(scopedPart(g)))
+          split.growing.map(g => score(scoped(g, partitionNames)))
         def withGrowing(sealed0: DataFrame): DataFrame =
           growingScored.fold(sealed0)(sealed0.unionByName(_))
         after match {
@@ -1582,7 +1359,7 @@ object CollectionSearch {
               }
             withGrowing(probeTop.unionByName(sealedScored(rest)))
         }
-      } else score(coll.read(spark, partitionNames))
+    }.getOrElse(score(coll.read(spark, partitionNames)))
     Knn.limitPerQid(keyset(scored), "qid",
       Seq(col("score").asc, col(pk).asc), batchSize).drop("qid", "rank")
   }
@@ -1629,35 +1406,22 @@ object CollectionSearch {
     val pk = d.primaryField.name
     searchParams.get("metric_type").foreach(m => require(
       m.toUpperCase == "IP", s"sparse vectors support IP, not $m"))
-    val sparseIx = d.indexes.find(ix => ix.field == vecField &&
-      Set("SPARSE_INVERTED_INDEX", "SPARSE_WAND")
-        .contains(ix.indexType.toUpperCase))
-    def scoped(df: DataFrame): DataFrame =
-      if (partitionNames.isEmpty || !df.columns.contains("_part")) df
-      else df.filter(col("_part").isin(partitionNames: _*))
-    val scored =
-      if (sparseIx.isDefined) {
-        val buckets = sparseIx.flatMap(_.params.get("buckets"))
-          .map(_.toInt).getOrElse(64)
-        val serve = IndexStore.serveSparse(spark, coll, vecField, buckets)
-        val postings = scoped(serve.postings)
-        val postFiltered = sparseFilteredPostings(spark, coll, postings,
-          filterExpr, partitionNames)
-        SparseInverted.scoresDeterministic(postFiltered, query, pk,
-          serve.build.numBuckets, None)
-      } else {
-        val data = coll.read(spark, partitionNames)
-        val pred =
-          if (filterExpr.trim.isEmpty) None
-          else Some(MilvusExpr.compile(filterExpr, data))
-        val qv = map(query.toSeq.sortBy(_._1).flatMap {
-          case (i, v) => Seq(lit(i), lit(v)) }: _*)
-        val dimsArr = array(query.keys.toSeq.sorted.map(lit): _*)
-        pred.foldLeft(data.filter(col(vecField).isNotNull))(_ filter _)
-          .filter(arrays_overlap(map_keys(col(vecField)), dimsArr))
-          .select(col(pk), graft.Functions.sparseIp(col(vecField), qv)
-            .as("score"))
-      }
+    val scored = sparseFamily(d, vecField).map { s =>
+      val (serve, postings) = sparsePostings(spark, coll, vecField, s,
+        filterExpr, partitionNames)
+      SparseInverted.scoresDeterministic(postings, query, pk,
+        serve.build.numBuckets, None)
+    }.getOrElse {
+      val data = coll.read(spark, partitionNames)
+      val pred = filterOn(filterExpr, data)
+      val qv = map(query.toSeq.sortBy(_._1).flatMap {
+        case (i, v) => Seq(lit(i), lit(v)) }: _*)
+      val dimsArr = array(query.keys.toSeq.sorted.map(lit): _*)
+      pred.foldLeft(data.filter(col(vecField).isNotNull))(_ filter _)
+        .filter(arrays_overlap(map_keys(col(vecField)), dimsArr))
+        .select(col(pk), graft.Functions.sparseIp(col(vecField), qv)
+          .as("score"))
+    }
     // Banded iteration (radius / range_filter; sparse IP is
     // similarity-like: radius < s <= range_filter).
     val (spRadius, spRangeFilter) = bandParams(searchParams, simLike = true)

@@ -3,7 +3,7 @@ package graft.store
 import graft.ann.{BinIvf, Hnsw, Ivf, Lsh, Pq, RaBitQ, SparseInverted, Sq8, Vamana}
 import graft.text.Bm25
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.json4s.JsonDSL._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -13,119 +13,109 @@ import org.json4s.jackson.JsonMethods
   * are first-class objects created/dropped/rebuilt against a
   * collection, 2.6/common.py:882-898, scalar_index_cycle.py:124-174).
   *
-  * Layout under `<collectionDir>/index/<field>/`:
+  * Which build serves a declared index is decided by the
+  * [[IndexFamily]] table (params parsed and defaulted once). Every
+  * family then runs ONE lifecycle, [[ensure]]: a build cache keyed
+  * `(collection dir, field, param shape, write-seq)`, the pointer-match
+  * load, the growing-segment stale load ([[staleServable]]) and, on a
+  * miss, the family's build followed by the pointer commit. The trained
+  * dense families (IVF, RaBitQ, SQ8, PQ, BIN_IVF, LSH) share one build
+  * skeleton ([[Dense]]: snapshot → train → encode → `partitionBy`
+  * write → model JSON), the graph families (HNSW, DISKANN) another.
+  *
+  * Layout under `<collectionDir>/index/<field>/` (unchanged on disk):
   *   `current_<family>.json` — atomic per-family pointer {builtSeq,
   *     kind, metric, nlist}; legacy shared `current.json` still reads
-  *   `v_<seq>/`      — one immutable build per collection write-seq:
-  *     IVF:   `centroids.json` + `data/` (snapshot parquet,
-  *            `partitionBy(_cid)` → probe filters prune directories)
-  *     BM25:  `postings/` (parquet `partitionBy(_tb)` term-hash
-  *            buckets → query terms prune directories), `docfreq/`
+  *   `v_<seq>_<kind>_<metric>_<nlist>/` — one immutable build:
+  *     dense:  `data/` (snapshot parquet, `partitionBy` the family's
+  *             cell/bucket columns → probe filters prune directories)
+  *             + the model: `centroids.json` (IVF, RaBitQ), `sq8.json`,
+  *             `pq.json`, `binivf.json`, `planes.json` (LSH); lazily
+  *             `cell_radii.json` (IVF / BIN_IVF range bounds)
+  *     graph:  `data/` node tables `partitionBy(_part, seg)`
+  *     sparse: `postings/` (`partitionBy` dimension bucket), `dimstats/`
+  *     BM25:   term-hash-bucketed postings + doc stats
+  *     JSON path / geo grid: `data/` value- or cell-partitioned tables
   *
   * Freshness contract: a build is valid only for the collection
   * write-seq it was built at. Searches call `ensure*`, which reuses the
   * persisted build when `builtSeq == coll.committedSeq` (the max
   * COMMITTED delta seq — not the catalog counter, which is reserved
   * before the delta lands and would let a build racing a DML validate
-  * against a snapshot missing the in-flight delta) and rebuilds
-  * otherwise (lazy rebuild-on-first-search-after-DML — the rebuild is
-  * the same linear offline job the reference schedules explicitly, and
-  * its cost amortizes across every query until the next write). This
-  * also fixes the round-2 staleness bug where an in-memory IVF model
-  * survived DML forever.
+  * against a snapshot missing the in-flight delta), keeps a slightly
+  * stale build when its post-build deltas are small enough to serve
+  * inline (sealed ⊎ growing), and rebuilds otherwise (lazy
+  * rebuild-on-first-search-after-DML — the rebuild is the same linear
+  * offline job the reference schedules explicitly, and its cost
+  * amortizes across every query until the next write).
   *
   * At 100 TB: the data/postings rewrite is a single linear
   * shuffle-on-partition-column job (the standard offline index build);
   * queries after that touch only probed `_cid` / term-bucket
-  * directories. For write-heavy workloads the natural extension is
-  * delta-merge (index the base, assign new deltas inline at query
-  * time); the reference's own model is explicit rebuild cycles, which
-  * this mirrors.
+  * directories.
   */
 object IndexStore {
 
+  /** A persisted build at one collection write-seq. */
+  trait Versioned { def builtSeq: Long }
+
+  /** A dense vector build: `encode` turns raw rows into the persisted
+    * layout with the build's model — the build's own write and the
+    * growing side of [[serve]] both go through it.
+    */
+  trait DenseBuild extends Versioned {
+    def dataPath: String
+    def encode(df: DataFrame, field: String): DataFrame
+  }
+
   final case class IvfBuild(model: Ivf.Model, dataPath: String,
       nlist: Int, builtSeq: Long,
-      bounds: Option[Ivf.CellBounds] = None) {
-    def radii: Option[Array[Double]] = bounds.map(_.radii)
-    def angles: Option[Array[Double]] = bounds.map(_.angles)
+      bounds: Option[Ivf.CellBounds] = None) extends DenseBuild {
+    def encode(df: DataFrame, field: String): DataFrame =
+      Ivf.assign(df, field, model)
+  }
+
+  final case class RabitqBuild(model: Ivf.Model, dataPath: String,
+      nlist: Int, builtSeq: Long) extends DenseBuild {
+    def encode(df: DataFrame, field: String): DataFrame =
+      RaBitQ.encode(df, field, model)
+  }
+
+  final case class Sq8Build(model: Sq8.Model, dataPath: String,
+      nlist: Int, builtSeq: Long) extends DenseBuild {
+    def encode(df: DataFrame, field: String): DataFrame =
+      Sq8.encode(df, field, model)
+  }
+
+  final case class PqBuild(model: Pq.Model, dataPath: String,
+      nlist: Int, builtSeq: Long) extends DenseBuild {
+    def encode(df: DataFrame, field: String): DataFrame =
+      Pq.encode(df, field, model)
+  }
+
+  final case class BinIvfBuild(model: BinIvf.Model, dataPath: String,
+      nlist: Int, builtSeq: Long) extends DenseBuild {
+    def encode(df: DataFrame, field: String): DataFrame =
+      BinIvf.assign(df, field, model)
+  }
+
+  final case class LshBuild(model: Lsh.Model, dataPath: String,
+      builtSeq: Long) extends DenseBuild {
+    def encode(df: DataFrame, field: String): DataFrame =
+      Lsh.explodeTables(df, field, model)
   }
 
   final case class Bm25Build(persisted: Bm25.PersistedBm25, builtSeq: Long)
-
-  // Memoized models per (collection, field, metric, nlist, builtSeq):
-  // the seq in the key self-invalidates after any DML (stale entries
-  // for the same collection+field are evicted on insert).
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Int, Long), IvfBuild]()
-  private val bm25Cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Long), Bm25Build]()
-  // (collection, field, analyzer, builtSeq, committedSeq) -> adjusted
-  // stats / pinned growing mini-postings for BM25 delta serving; stale
-  // generations evicted on DML, whole fields on drop (the name-keyed
-  // entries would otherwise be REUSED by a recreated collection).
-  private val bm25StatsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Long, Long), Bm25.DeltaStats]()
-  private val bm25GrowingCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Long, Long), DataFrame]()
-
-  final case class RabitqBuild(model: Ivf.Model, dataPath: String,
-      nlist: Int, builtSeq: Long)
-
-  private val rabitqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Int, Long), RabitqBuild]()
-
-  final case class Sq8Build(model: Sq8.Model, dataPath: String,
-      nlist: Int, builtSeq: Long)
-
-  private val sq8Cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Int, Long), Sq8Build]()
-
-  final case class PqBuild(model: Pq.Model, dataPath: String,
-      nlist: Int, builtSeq: Long)
-
-  // Keyed by (collection, field, metric, "nlist:m:ksub", seq) — the PQ
-  // shape parameters ride in one string slot; the pointer encodes them
-  // in its kind ("pqv1_<m>_<ksub>") so stale layouts rebuild lazily.
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, String, Long), PqBuild]()
-
-  final case class BinIvfBuild(model: BinIvf.Model, dataPath: String,
-      nlist: Int, builtSeq: Long,
-      radii: Option[Array[Long]] = None)
-
-  private val binIvfCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Long), BinIvfBuild]()
+      extends Versioned
 
   final case class SparseBuild(postingsPath: String, numBuckets: Int,
-      builtSeq: Long, dimStatsPath: String)
-
-  private val dimStatsMapCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[Int, (Double, Double)]]()
-
-  /** The build's WAND impact stats, collected once per build version
-    * and held driver-side like IVF centroids (the path is versioned,
-    * so DML invalidation comes free with the new build).
-    */
-  def sparseDimStats(spark: SparkSession,
-      build: SparseBuild): Map[Int, (Double, Double)] =
-    dimStatsMapCache.computeIfAbsent(build.dimStatsPath, p =>
-      SparseInverted.collectDimStats(spark.read.parquet(p)))
-
-  private val sparseCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Long), SparseBuild]()
+      builtSeq: Long, dimStatsPath: String) extends Versioned
 
   final case class JsonPathBuild(dataPath: String, path: String,
-      castType: String, builtSeq: Long)
-
-  private val jsonPathCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, String, Long), JsonPathBuild]()
+      castType: String, builtSeq: Long) extends Versioned
 
   final case class RtreeBuild(dataPath: String, cellSize: Double,
-      builtSeq: Long)
-
-  private val rtreeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Long), RtreeBuild]()
+      builtSeq: Long) extends Versioned
 
   /** Persisted per-(partition, segment) HNSW graph build — the genuine
     * graph family ([[graft.ann.Hnsw]]) under the same pointer /
@@ -135,9 +125,17 @@ object IndexStore {
     */
   final case class HnswBuild(dataPath: String, m: Int,
       efConstruction: Int, segments: Int, seed: Long, metric: String,
-      builtSeq: Long)
+      builtSeq: Long) extends Versioned
 
-  /** The servable frame of an HNSW build: the sealed per-segment
+  /** Persisted Vamana build facts — served through [[serveGraph]] /
+    * [[graft.ann.Hnsw.searchParts]] (same node-table layout, medoid
+    * entry encoded as the sole level-1 node).
+    */
+  final case class VamanaBuild(dataPath: String, r: Int, l: Int,
+      alpha: Double, segments: Int, metric: String, builtSeq: Long)
+      extends Versioned
+
+  /** The servable frame of a graph build: the sealed per-segment
     * graphs (post-build-changed pks masked out — dangling edges drop
     * at walk time, [[graft.ann.Hnsw.searchParts]]) plus the growing
     * delta rows, which have no graph and are brute-forced exactly at
@@ -147,14 +145,52 @@ object IndexStore {
   final case class HnswServe(sealedGraph: DataFrame,
       growing: Option[DataFrame], deltaServed: Boolean)
 
-  final case class LshBuild(model: Lsh.Model, dataPath: String,
-      builtSeq: Long)
+  /** Sealed ⊎ growing SPLIT view of a dense build, for exact serving
+    * paths whose sealed-side pruning bounds were computed at BUILD
+    * time and do not hold for delta rows (range search's per-cell
+    * radii): the sealed parquet masked of changed pks, plus the raw
+    * delta rows to scan exactly on the side.
+    */
+  final case class DenseSplit(sealedRows: DataFrame,
+      growing: Option[DataFrame])
 
-  private val lshCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, Long), LshBuild]()
+  /** The servable sparse postings frame: sealed alone when fresh,
+    * otherwise sealed ∖ changed-pks ∪ growing (exact — IP scores carry
+    * no corpus stats, so unlike BM25 nothing needs adjusting).
+    * `deltaServed` tells WAND callers to take the exact bucket-pruned
+    * route instead: the persisted per-dim impact bounds do NOT cover
+    * the growing postings, so max-score pruning with them could
+    * wrongly exclude a new high-impact posting (the exact route
+    * returns identical results; pruning resumes at the next rebuild).
+    */
+  final case class SparseServe(postings: DataFrame, deltaServed: Boolean,
+      build: SparseBuild)
 
-  private val hnswCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, String, Long), HnswBuild]()
+  private implicit val formats: Formats = DefaultFormats
+
+  // Every memoized build — plus BM25's per-DML-generation delta stats —
+  // keyed (cacheId, field, param shape, seq): the seq in the key
+  // self-invalidates after any DML (stale seqs of a field are evicted
+  // on its next lookup), drop/dropAllCached evict by collection.
+  private val builds = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String, Long), AnyRef]()
+  // Lazily derived per-build artifacts (cell bounds, Hamming radii, WAND
+  // impact stats), keyed on the build's VERSIONED path — DML
+  // invalidation comes free with the new build; a recreated collection
+  // reuses the exact paths, so drops evict by path prefix.
+  private val derived =
+    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  private def cached[T](coll: Collection, field: String, tag: String,
+      seq: Long)(f: => T): T = {
+    val cid = cacheId(coll)
+    builds.keySet.removeIf(k => k._1 == cid && k._2 == field && k._4 != seq)
+    builds.computeIfAbsent((cid, field, tag, seq), _ => f.asInstanceOf[AnyRef])
+      .asInstanceOf[T]
+  }
+
+  private def derive[T](path: String)(f: => T): T =
+    derived.computeIfAbsent(path, _ => f.asInstanceOf[AnyRef]).asInstanceOf[T]
 
   private def indexDir(coll: Collection, field: String): StorePath =
     coll.catalog.collectionDir(coll.name).resolve("index").resolve(field)
@@ -179,6 +215,18 @@ object IndexStore {
       metric: String, nlist: Int): StorePath =
     dir.resolve(s"v_${seq}_${kind}_${metric}_$nlist")
 
+  /** The on-disk identity of one build: the pointer's (kind, metric,
+    * nlist) and the version dir they name. `tag` adds in-process cache
+    * identity the on-disk names do not carry (LSH seed, JSON path).
+    */
+  private final case class Shape(kind: String, metric: String, nlist: Int,
+      tag: String = "") {
+    def dir(fieldDir: StorePath, seq: Long): StorePath =
+      versionDir(fieldDir, seq, kind, metric, nlist)
+    def matches(p: Pointer): Boolean =
+      p.kind == kind && p.metric == metric && p.nlist == nlist
+  }
+
   /** Outer partition levels for a persisted vector build: `_part`
     * leads only when the collection can hold more than the default
     * partition, so partition-scoped searches prune whole partition
@@ -201,7 +249,13 @@ object IndexStore {
     if (unpartitioned) inner.toSeq else "_part" +: inner.toSeq
   }
 
-  // ---- growing-segment serving --------------------------------------------
+  private def readJson(f: StorePath): JValue =
+    JsonMethods.parse(new String(f.readBytes))
+
+  private def writeJson(f: StorePath, j: JValue): Unit =
+    f.writeBytes(JsonMethods.compact(JsonMethods.render(j)).getBytes)
+
+  // ---- the one lifecycle ----------------------------------------------------
 
   /** Post-DML serving gate — the Milvus sealed/growing segment model,
     * Spark-first: instead of rebuilding a vector index after EVERY
@@ -237,19 +291,309 @@ object IndexStore {
       deltaBytes <= math.max((frac * buildDir.totalSize).toLong, floor)
   }
 
-  /** Load an existing build at its POINTER seq (not the collection's
-    * current seq) when [[staleServable]] says the delta volume since it
-    * is small enough to serve inline. `kindMatches` checks the pointer
-    * describes the same index family/params the caller wants.
+  /** Load an existing build of `shape` at its POINTER seq (not the
+    * collection's current seq `seq`) when [[staleServable]] says the
+    * delta volume since it is small enough to serve inline.
     */
   private def staleLoad[B](spark: SparkSession, coll: Collection,
-      dir: StorePath, seq: Long, kind: String,
-      kindMatches: Pointer => Boolean,
-      vdir: Long => StorePath, load: Long => Option[B]): Option[B] =
-    readPointer(dir, kind)
-      .filter(p => p.builtSeq < seq && kindMatches(p))
-      .filter(p => staleServable(spark, coll, p.builtSeq, vdir(p.builtSeq)))
-      .flatMap(p => load(p.builtSeq))
+      field: String, seq: Long, shape: Shape)(
+      load: (StorePath, Long) => B): Option[B] = {
+    val dir = indexDir(coll, field)
+    readPointer(dir, shape.kind)
+      .filter(p => p.builtSeq < seq && shape.matches(p) &&
+        staleServable(spark, coll, p.builtSeq, shape.dir(dir, p.builtSeq)))
+      .map(p => load(shape.dir(dir, p.builtSeq), p.builtSeq))
+  }
+
+  /** Ensure a servable persisted build of `shape` for `field`: reuse
+    * when the on-disk build matches the collection's current write-seq,
+    * keep a slightly-stale build when the post-build deltas are small
+    * enough to serve inline (growing-segment serving — see
+    * [[staleServable]]; searches must then read the frame through the
+    * family's serve call), build + commit the pointer otherwise.
+    * `allowStale = false` (create_index/rebuild, and the families that
+    * delta-serve from their own serve call) always materializes fresh.
+    * `load`/`build` get the build's version dir and seq.
+    */
+  private def ensure[B <: Versioned](spark: SparkSession, coll: Collection,
+      field: String, shape: Shape, allowStale: Boolean)(
+      load: (StorePath, Long) => B)(build: (StorePath, Long) => B): B = {
+    val seq = coll.committedSeq
+    // an explicit materialize must not return a cached STALE-SERVED build
+    if (!allowStale)
+      builds.computeIfPresent((cacheId(coll), field, shape.toString, seq),
+        (_, b) => if (b.asInstanceOf[Versioned].builtSeq != seq) null else b)
+    cached(coll, field, shape.toString, seq) {
+      val dir = indexDir(coll, field)
+      readPointer(dir, shape.kind)
+        .filter(p => p.builtSeq == seq && shape.matches(p))
+        .map(_ => load(shape.dir(dir, seq), seq))
+        .orElse(if (allowStale) staleLoad(spark, coll, field, seq, shape)(load)
+          else None)
+        .getOrElse {
+          val b = build(shape.dir(dir, seq), seq)
+          commitPointer(dir, seq, shape.kind, shape.metric, shape.nlist)
+          b
+        }
+    }
+  }
+
+  /** A trained dense family: `train` fits the model on the snapshot,
+    * `wrap` makes the build (whose `encode` writes the layout
+    * `partitionBy(layout)`), and the model round-trips through
+    * `metaFile` beside `data/`.
+    */
+  private final case class Dense[M, B <: DenseBuild](shape: Shape,
+      metaFile: String, layout: Seq[String], train: DataFrame => M,
+      toJson: M => JObject, fromJson: JValue => M,
+      wrap: (M, String, Long) => B)
+
+  private def ensureDense[M, B <: DenseBuild](spark: SparkSession,
+      coll: Collection, field: String, d: Dense[M, B],
+      allowStale: Boolean): B =
+    ensure(spark, coll, field, d.shape, allowStale)((vdir, s) => d.wrap(
+      d.fromJson(readJson(vdir.resolve(d.metaFile))),
+      vdir.resolve("data").toString, s)) { (vdir, seq) =>
+      // Null vectors (nullable vector fields, 3.0 plan §4) are not
+      // indexed: they can't be trained on (the sample collect would NPE)
+      // and must never surface from a probe.
+      val snapshot = coll.readWithPartition(spark).filter(col(field).isNotNull)
+      val model = d.train(snapshot)
+      val b = d.wrap(model, vdir.resolve("data").toString, seq)
+      // One shuffle on the LEAF layout key to co-locate each output
+      // directory's rows in one task -> one file per leaf directory,
+      // instead of every task writing into every leaf (tasks x nlist
+      // small files). See [[vectorLayout]] for the conditional `_part`
+      // outer level.
+      val parts = vectorLayout(coll, d.layout: _*)
+      b.encode(snapshot, field)
+        .repartition(parts.map(col): _*)
+        .write.mode("overwrite").partitionBy(parts: _*).parquet(b.dataPath)
+      writeJson(vdir.resolve(d.metaFile), d.toJson(model))
+      b
+    }
+
+  private def centroidsJson(metric: String, nlist: Int,
+      m: Ivf.Model): JObject =
+    ("metric" -> metric) ~ ("nlist" -> nlist) ~
+      ("centroids" -> m.centroids.toSeq.map(_.toSeq))
+
+  private def ivfModel(j: JValue, metric: String): Ivf.Model =
+    Ivf.Model((j \ "centroids").extract[Seq[Seq[Double]]].map(_.toArray)
+      .toArray, metric)
+
+  /** Persisted IVF index — per-cell pruning bounds are LAZY since round
+    * 12 (see [[ivfBounds]]): builds that only ever serve probe-budget
+    * ANN never pay the bounds pass.
+    */
+  def ensureIvf(spark: SparkSession, coll: Collection,
+      field: String, metric: String, nlist: Int,
+      allowStale: Boolean = true): IvfBuild =
+    ensureDense(spark, coll, field, Dense[Ivf.Model, IvfBuild](
+      Shape("ivf2", metric, nlist), "centroids.json", Seq("_cid"),
+      Ivf.train(_, field, k = nlist, metric = metric),
+      centroidsJson(metric, nlist, _), ivfModel(_, metric),
+      IvfBuild(_, _, nlist, _)), allowStale)
+
+  /** RaBitQ (1-bit quantized IVF): the cell-partitioned snapshot
+    * additionally carries the residual sign code and norm columns the
+    * estimate pass scans.
+    */
+  def ensureRabitq(spark: SparkSession, coll: Collection,
+      field: String, metric: String, nlist: Int,
+      allowStale: Boolean = true): RabitqBuild =
+    ensureDense(spark, coll, field, Dense[Ivf.Model, RabitqBuild](
+      Shape("rabitq2", metric, nlist), "centroids.json", Seq("_cid"),
+      Ivf.train(_, field, k = nlist, metric = metric),
+      centroidsJson(metric, nlist, _), ivfModel(_, metric),
+      RabitqBuild(_, _, nlist, _)), allowStale)
+
+  /** IVF_SQ8 (8-bit scalar-quantized IVF): the snapshot additionally
+    * carries the byte code and decoded-norm columns the ADC estimate
+    * pass scans.
+    */
+  def ensureSq8(spark: SparkSession, coll: Collection,
+      field: String, metric: String, nlist: Int,
+      allowStale: Boolean = true): Sq8Build =
+    ensureDense(spark, coll, field, Dense[Sq8.Model, Sq8Build](
+      Shape("sq8v2", metric, nlist), "sq8.json", Seq("_cid"),
+      Sq8.train(_, field, nlist, metric),
+      m => centroidsJson(metric, nlist, m.ivf) ~
+        ("mins" -> m.mins.toSeq) ~ ("maxs" -> m.maxs.toSeq),
+      j => Sq8.Model(ivfModel(j, metric),
+        (j \ "mins").extract[Seq[Double]].toArray,
+        (j \ "maxs").extract[Seq[Double]].toArray),
+      Sq8Build(_, _, nlist, _)), allowStale)
+
+  /** IVF_PQ (residual product quantization): an m-byte code payload and
+    * the codebook persisted beside the centroids; the PQ shape rides
+    * in the kind ("pqv1_<m>_<ksub>") so other layouts rebuild lazily.
+    */
+  def ensurePq(spark: SparkSession, coll: Collection, field: String,
+      metric: String, nlist: Int, m: Int, ksub: Int,
+      allowStale: Boolean = true): PqBuild =
+    ensureDense(spark, coll, field, Dense[Pq.Model, PqBuild](
+      Shape(s"pqv1_${m}_$ksub", metric, nlist), "pq.json", Seq("_cid"),
+      Pq.train(_, field, nlist, m, ksub, metric),
+      model => centroidsJson(metric, nlist, model.ivf) ~
+        ("codebook" -> model.codebook.toSeq.map(_.toSeq.map(_.toSeq))),
+      j => Pq.Model(ivfModel(j, metric),
+        (j \ "codebook").extract[Seq[Seq[Seq[Double]]]]
+          .map(_.map(_.toArray).toArray).toArray),
+      PqBuild(_, _, nlist, _)), allowStale)
+
+  /** BIN_IVF_FLAT (binary-vector IVF, k-majority cells) over Hamming
+    * geometry; per-cell radii are lazy ([[binIvfRadii]]).
+    */
+  def ensureBinIvf(spark: SparkSession, coll: Collection,
+      field: String, nlist: Int, allowStale: Boolean = true): BinIvfBuild =
+    ensureDense(spark, coll, field, Dense[BinIvf.Model, BinIvfBuild](
+      Shape("binivf2", "HAMMING", nlist), "binivf.json", Seq(BinIvf.CID),
+      BinIvf.train(_, field, k = nlist),
+      m => ("nlist" -> nlist) ~ ("centroids" -> m.centroids.toSeq.map(c =>
+        c.map(b => f"${b & 0xff}%02x").mkString)),
+      j => BinIvf.Model((j \ "centroids").extract[Seq[String]].map(
+        _.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray).toArray),
+      BinIvfBuild(_, _, nlist, _)), allowStale)
+
+  /** Random-hyperplane LSH: the [[Lsh.explodeTables]] layout written
+    * `partitionBy("_t", "_sig")` so EVERY hash table's probe set prunes
+    * bucket directories at the scan, plus the seeded plane matrix in
+    * `planes.json`. Hyperplanes are data-independent, so the rebuild
+    * after DML is one signature projection + shuffle — no training
+    * scan. Tables/planes ride in the pointer's nlist slot, packed.
+    */
+  def ensureLsh(spark: SparkSession, coll: Collection, field: String,
+      metric: String, tables: Int, numPlanes: Int,
+      seed: Long = 42L, allowStale: Boolean = true): LshBuild =
+    ensureDense(spark, coll, field, Dense[Lsh.Model, LshBuild](
+      Shape(s"lsh2_${tables}x$numPlanes", metric, tables * 1000 + numPlanes,
+        seed.toString), "planes.json", Seq("_t", "_sig"),
+      // dim comes from the data, not the declared FieldDef — the
+      // signature must cover the stored vectors exactly.
+      s => Lsh.train(s.select(size(col(field))).head().getInt(0), tables,
+        numPlanes, metric, seed),
+      m => ("metric" -> metric) ~ ("seed" -> seed) ~
+        ("planes" -> m.planes.toSeq.map(_.toSeq.map(_.toSeq))),
+      j => Lsh.Model((j \ "planes").extract[Seq[Seq[Seq[Double]]]]
+        .map(_.map(_.toArray).toArray).toArray, metric),
+      LshBuild(_, _, _)), allowStale)
+
+  // ---- graph families (HNSW, DISKANN) ---------------------------------------
+
+  /** Bounded per-segment row cap for graph builds
+    * (`graft.graph.maxSegmentRows`): each segment's graph is built
+    * IN-TASK memory (arrays O(size × (dim + m × levels))), so the cap
+    * — never the data size — is what bounds executor memory at scale:
+    * more data means MORE segments, never bigger ones. Search fans
+    * the beam walk out per segment and unions candidates exactly, so
+    * recall is shard-count-invariant. 250k 64-dim nodes ≈ 140 MB of
+    * task arrays — comfortable in a 4 GB executor with headroom for
+    * the scan.
+    *
+    * `segments = 0` first resolves to a live `family` pointer's pinned
+    * count when its other parameters match (`matches` over the kind's
+    * `-`-separated tokens, the count at `segAt`) — reuse and
+    * stale-serve must resolve the SAME kind string, so auto-sizing may
+    * not drift away from an existing build; one count job is paid only
+    * when a fresh build is being sized.
+    */
+  private def graphSegments(spark: SparkSession, coll: Collection,
+      field: String, segments: Int, family: String,
+      matches: Array[String] => Boolean, segAt: Int): Int =
+    if (segments > 0) segments
+    else readPointer(indexDir(coll, field), family).flatMap { p =>
+      val parts = p.kind.split("-")
+      if (kindFamily(p.kind) == family && parts.length > segAt &&
+          scala.util.Try(matches(parts)).getOrElse(false))
+        scala.util.Try(parts(segAt).toInt).toOption
+      else None
+    }.getOrElse {
+      val cap = spark.conf.getOption("graft.graph.maxSegmentRows")
+        .map(_.toLong).getOrElse(250000L)
+      val rows = coll.read(spark).count()
+      math.max(spark.sessionState.conf.numShufflePartitions,
+        math.ceil(rows.toDouble / cap).toInt)
+    }
+
+  private def ensureGraph[B <: Versioned](spark: SparkSession,
+      coll: Collection, field: String, shape: Shape, allowStale: Boolean)(
+      wrap: (String, Long) => B)(
+      nodes: (DataFrame, String) => Dataset[Hnsw.GraphRow]): B =
+    ensure(spark, coll, field, shape, allowStale)((vdir, s) =>
+      wrap(vdir.resolve("data").toString, s)) { (vdir, seq) =>
+      val dataPath = vdir.resolve("data").toString
+      // Null vectors are not indexed. One shuffle on the (part, seg)
+      // key — each task builds its segment's graph in memory and writes
+      // one leaf directory.
+      nodes(coll.readWithPartition(spark).filter(col(field).isNotNull),
+        coll.definition.primaryField.name)
+        .toDF().withColumnRenamed("part", "_part")
+        .write.mode("overwrite").partitionBy(vectorLayout(coll, "seg"): _*)
+        .parquet(dataPath)
+      wrap(dataPath, seq)
+    }
+
+  /** Persisted HNSW graph index; searches read it through [[serveHnsw]],
+    * which masks changed pks out of the sealed graphs and brute-forces
+    * the delta.
+    */
+  def ensureHnsw(spark: SparkSession, coll: Collection, field: String,
+      metric: String, m: Int, efConstruction: Int, segments: Int = 0,
+      seed: Long = 42L, allowStale: Boolean = true): HnswBuild = {
+    // hnsw1-m-efc-segs-seed
+    val segs = graphSegments(spark, coll, field, segments, "hnsw1",
+      ps => ps(1).toInt == m && ps(2).toInt == efConstruction &&
+        ps(4).toLong == seed, segAt = 3)
+    ensureGraph(spark, coll, field,
+      Shape(s"hnsw1-$m-$efConstruction-$segs-$seed", metric, m), allowStale)(
+      HnswBuild(_, m, efConstruction, segs, seed, metric, _))(
+      Hnsw.buildParts(_, field, _, "_part",
+        Hnsw.Params(m, efConstruction, metric, seed), segs))
+  }
+
+  /** Persisted Vamana (DISKANN) graph index — the [[ensureHnsw]]
+    * lifecycle with the α-robust-pruned single-layer build in-task.
+    */
+  def ensureDiskann(spark: SparkSession, coll: Collection, field: String,
+      metric: String, r: Int, l: Int, alpha: Double, segments: Int = 0,
+      allowStale: Boolean = true): VamanaBuild = {
+    // vamana1-r-l-alpha100-segs
+    val segs = graphSegments(spark, coll, field, segments, "vamana1",
+      ps => ps(1).toInt == r && ps(2).toInt == l &&
+        ps(3).toLong == math.round(alpha * 100), segAt = 4)
+    ensureGraph(spark, coll, field,
+      Shape(s"vamana1-$r-$l-${math.round(alpha * 100)}-$segs", metric, r),
+      allowStale)(VamanaBuild(_, r, l, alpha, segs, metric, _))(
+      Vamana.buildParts(_, field, _, "_part", Vamana.Params(r, l, alpha, metric),
+        segs))
+  }
+
+  // ---- serving --------------------------------------------------------------
+
+  /** The late-committed-import fallback and the sealed/growing split
+    * share one shape: None when the build at `builtSeq` is fresh;
+    * otherwise Some((changed pks, visible delta rows)), where the
+    * changed-pk set is None in the rare window a late-committed 2PC
+    * import landed in (its rows order below sealed rows, commitImport
+    * doc) — window-local resolution is unsound there, so callers serve
+    * the full current snapshot exactly instead.
+    */
+  private def deltaSince(spark: SparkSession, coll: Collection,
+      builtSeq: Long): Option[(Option[DataFrame], DataFrame)] =
+    if (builtSeq >= coll.committedSeq) None
+    else Some(coll.deltaViewSince(spark, builtSeq) match {
+      case Some((newRows, changedPks)) => (Some(changedPks), newRows)
+      case None => (None, coll.readWithPartition(spark))
+    })
+
+  /** Align a growing frame to the sealed side: the sealed side's
+    * partition-column types are INFERRED from directory names on read
+    * (e.g. `_sig=12` reads as int).
+    */
+  private def alignTo(base: DataFrame, growing: DataFrame): DataFrame =
+    growing.select(base.columns.map(c =>
+      col(c).cast(base.schema(c).dataType).as(c)): _*)
 
   /** The servable frame of a dense vector build: the persisted parquet
     * alone when fresh; otherwise SEALED ⊎ GROWING — the persisted rows
@@ -268,288 +612,125 @@ object IndexStore {
     * fresh-build run the way any two trainings differ, while exact
     * re-rank and full-probe searches are bit-identical.
     */
-  private def servedDense(spark: SparkSession, coll: Collection,
-      dataPath: String, builtSeq: Long)(
-      encode: DataFrame => DataFrame): DataFrame = {
-    val base = spark.read.parquet(dataPath)
-    if (builtSeq >= coll.committedSeq) return base
-    val pk = coll.definition.primaryField.name
-    coll.deltaViewSince(spark, builtSeq) match {
-      case Some((newRows, changedPks)) =>
-        val growing = encode(newRows)
-        // The sealed side's partition-column types are INFERRED from
-        // directory names on read (e.g. `_sig=12` reads as int); align
-        // the growing side to them so the union resolves.
-        val aligned = growing.select(base.columns.map(c =>
-          col(c).cast(base.schema(c).dataType).as(c)): _*)
-        base.join(broadcast(changedPks), Seq(pk), "left_anti")
-          .unionByName(aligned)
-      case None =>
-        // A late-committed 2PC import landed in the window (its rows
-        // order below sealed rows, commitImport doc): window-local
-        // resolution is unsound, so transiently encode the full
-        // current snapshot — exact, rare, and the next DML-free
-        // ensure() still reuses the persisted build.
-        encode(coll.readWithPartition(spark))
+  def serve(spark: SparkSession, coll: Collection, field: String,
+      b: DenseBuild): DataFrame = {
+    val base = spark.read.parquet(b.dataPath)
+    deltaSince(spark, coll, b.builtSeq).fold(base) {
+      case (Some(changedPks), newRows) =>
+        val pk = coll.definition.primaryField.name
+        base.join(broadcast(changedPks), Seq(pk), "left_anti").unionByName(
+          alignTo(base, b.encode(newRows.filter(col(field).isNotNull), field)))
+      case (None, all) =>
+        // transiently encode the full current snapshot — exact, rare,
+        // and the next DML-free ensure() still reuses the build.
+        b.encode(all.filter(col(field).isNotNull), field)
     }
   }
 
   def serveIvf(spark: SparkSession, coll: Collection, field: String,
-      b: IvfBuild): DataFrame =
-    servedDense(spark, coll, b.dataPath, b.builtSeq)(df =>
-      Ivf.assign(df.filter(col(field).isNotNull), field, b.model))
-
-  def serveRabitq(spark: SparkSession, coll: Collection, field: String,
-      b: RabitqBuild): DataFrame =
-    servedDense(spark, coll, b.dataPath, b.builtSeq)(df =>
-      RaBitQ.encode(df.filter(col(field).isNotNull), field, b.model))
+      b: IvfBuild): DataFrame = serve(spark, coll, field, b)
 
   def serveSq8(spark: SparkSession, coll: Collection, field: String,
-      b: Sq8Build): DataFrame =
-    servedDense(spark, coll, b.dataPath, b.builtSeq)(df =>
-      Sq8.encode(df.filter(col(field).isNotNull), field, b.model))
+      b: Sq8Build): DataFrame = serve(spark, coll, field, b)
 
-  def servePq(spark: SparkSession, coll: Collection, field: String,
-      b: PqBuild): DataFrame =
-    servedDense(spark, coll, b.dataPath, b.builtSeq)(df =>
-      Pq.encode(df.filter(col(field).isNotNull), field, b.model))
-
-  def serveBinIvf(spark: SparkSession, coll: Collection, field: String,
-      b: BinIvfBuild): DataFrame =
-    servedDense(spark, coll, b.dataPath, b.builtSeq)(df =>
-      BinIvf.assign(df.filter(col(field).isNotNull), field, b.model))
-
-  def serveLsh(spark: SparkSession, coll: Collection, field: String,
-      b: LshBuild): DataFrame =
-    servedDense(spark, coll, b.dataPath, b.builtSeq)(df =>
-      Lsh.explodeTables(df.filter(col(field).isNotNull), field, b.model))
-
-  /** Sealed ⊎ growing SPLIT view of a dense build, for exact serving
-    * paths whose sealed-side pruning bounds were computed at BUILD
-    * time and do not hold for delta rows (range search's per-cell
-    * radii): the sealed parquet masked of changed pks, plus the raw
-    * delta rows to scan exactly on the side. The late-committed-import
-    * window degrades to a full exact scan (empty sealed side), like
-    * every delta-serving family.
+  /** Sealed rows masked of the changed pks (`mask` anti-joins the pk
+    * set against the build's id column) + the raw delta rows; the
+    * late-import window serves an empty sealed side and the full
+    * snapshot as growing.
     */
-  final case class DenseSplit(sealedRows: DataFrame,
-      growing: Option[DataFrame], deltaServed: Boolean)
-
-  def serveDenseSplit(spark: SparkSession, coll: Collection,
-      field: String, dataPath: String, builtSeq: Long): DenseSplit = {
+  private def split(spark: SparkSession, coll: Collection, field: String,
+      dataPath: String, builtSeq: Long)(
+      mask: (DataFrame, DataFrame, String) => DataFrame
+  ): (DataFrame, Option[DataFrame]) = {
     val base = spark.read.parquet(dataPath)
-    if (builtSeq >= coll.committedSeq)
-      return DenseSplit(base, None, deltaServed = false)
-    val pk = coll.definition.primaryField.name
-    coll.deltaViewSince(spark, builtSeq) match {
-      case Some((newRows, changedPks)) =>
-        DenseSplit(base.join(broadcast(changedPks), Seq(pk), "left_anti"),
-          Some(newRows.filter(col(field).isNotNull)), deltaServed = true)
-      case None =>
-        DenseSplit(base.limit(0),
-          Some(coll.readWithPartition(spark).filter(col(field).isNotNull)),
-          deltaServed = false)
+    deltaSince(spark, coll, builtSeq) match {
+      case None => (base, None)
+      case Some((changed, rows)) =>
+        (changed.fold(base.limit(0))(
+          mask(base, _, coll.definition.primaryField.name)),
+          Some(rows.filter(col(field).isNotNull)))
     }
   }
 
-  /** Ensure a servable persisted IVF index for `field`: reuse when the
-    * on-disk build matches the collection's current write-seq, keep a
-    * slightly-stale build when the post-build deltas are small enough
-    * to serve inline (growing-segment serving — see [[staleServable]];
-    * searches must then read the frame through [[serveIvf]]), full
-    * rebuild otherwise. `allowStale = false` (create_index/rebuild)
-    * always materializes fresh.
-    */
-  def ensureIvf(spark: SparkSession, coll: Collection,
-      field: String, metric: String, nlist: Int,
-      allowStale: Boolean = true): IvfBuild = {
-    val seq = coll.committedSeq
-    val key = (cacheId(coll), field, metric, nlist, seq)
-    ivfCache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._5 != seq)
-    // an explicit materialize must not return a cached STALE-SERVED build
-    if (!allowStale)
-      ivfCache.keySet.removeIf(k => k == key && ivfCache.get(k) != null &&
-        ivfCache.get(k).builtSeq != seq)
-    ivfCache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      loadIvf(dir, metric, nlist, seq)
-        .orElse(if (!allowStale) None
-          else staleLoad(spark, coll, dir, seq, "ivf2",
-            p => p.kind == "ivf2" && p.metric == metric && p.nlist == nlist,
-            s => versionDir(dir, s, "ivf2", metric, nlist),
-            s => loadIvf(dir, metric, nlist, s)))
-        .getOrElse(buildIvf(spark, dir, coll, field, metric, nlist, seq))
-    })
+  /** Sealed ⊎ growing SPLIT of a dense build ([[DenseSplit]]). */
+  def serveDenseSplit(spark: SparkSession, coll: Collection,
+      field: String, dataPath: String, builtSeq: Long): DenseSplit = {
+    val (sealedRows, growing) = split(spark, coll, field, dataPath,
+      builtSeq)((base, pks, pk) =>
+      base.join(broadcast(pks), Seq(pk), "left_anti"))
+    DenseSplit(sealedRows, growing)
   }
 
-  /** Ensure a fresh persisted RaBitQ (1-bit quantized IVF) index —
-    * same lifecycle as [[ensureIvf]], different physical payload: the
-    * cell-partitioned snapshot additionally carries the residual sign
-    * code and norm columns the estimate pass scans.
+  /** Sealed ⊎ growing view of a persisted GRAPH build (HNSW or Vamana
+    * — see [[HnswServe]]; both families persist the same node-table
+    * layout). The changed-pk mask is a broadcast anti-join on the
+    * graph's `id` column (bounded by [[staleServable]]'s byte cap).
     */
-  def ensureRabitq(spark: SparkSession, coll: Collection,
-      field: String, metric: String, nlist: Int,
-      allowStale: Boolean = true): RabitqBuild = {
-    val seq = coll.committedSeq
-    val key = (cacheId(coll), field, metric, nlist, seq)
-    rabitqCache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._5 != seq)
-    if (!allowStale)
-      rabitqCache.keySet.removeIf(k => k == key && rabitqCache.get(k) != null &&
-        rabitqCache.get(k).builtSeq != seq)
-    rabitqCache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      loadRabitq(dir, metric, nlist, seq)
-        .orElse(if (!allowStale) None
-          else staleLoad(spark, coll, dir, seq, "rabitq2",
-            p => p.kind == "rabitq2" && p.metric == metric && p.nlist == nlist,
-            s => versionDir(dir, s, "rabitq2", metric, nlist),
-            s => loadRabitq(dir, metric, nlist, s)))
-        .getOrElse(buildRabitq(spark, dir, coll, field, metric, nlist, seq))
-    })
+  def serveGraph(spark: SparkSession, coll: Collection, field: String,
+      dataPath: String, builtSeq: Long): HnswServe = {
+    val (sealedGraph, growing) = split(spark, coll, field, dataPath,
+      builtSeq)((base, pks, pk) => base.join(
+      broadcast(pks.select(col(pk).cast("long").as("id"))), Seq("id"),
+      "left_anti"))
+    HnswServe(sealedGraph, growing, deltaServed = growing.isDefined)
   }
 
-  /** Ensure a fresh persisted IVF_SQ8 (8-bit scalar-quantized IVF)
-    * index — same lifecycle as [[ensureIvf]], different physical
-    * payload: the cell-partitioned snapshot additionally carries the
-    * byte code and decoded-norm columns the ADC estimate pass scans.
-    */
-  def ensureSq8(spark: SparkSession, coll: Collection,
-      field: String, metric: String, nlist: Int,
-      allowStale: Boolean = true): Sq8Build = {
-    val seq = coll.committedSeq
-    val key = (cacheId(coll), field, metric, nlist, seq)
-    sq8Cache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._5 != seq)
-    if (!allowStale)
-      sq8Cache.keySet.removeIf(k => k == key && sq8Cache.get(k) != null &&
-        sq8Cache.get(k).builtSeq != seq)
-    sq8Cache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      loadSq8(dir, metric, nlist, seq)
-        .orElse(if (!allowStale) None
-          else staleLoad(spark, coll, dir, seq, "sq8v2",
-            p => p.kind == "sq8v2" && p.metric == metric && p.nlist == nlist,
-            s => versionDir(dir, s, "sq8v2", metric, nlist),
-            s => loadSq8(dir, metric, nlist, s)))
-        .getOrElse(buildSq8(spark, dir, coll, field, metric, nlist, seq))
-    })
-  }
+  def serveHnsw(spark: SparkSession, coll: Collection, field: String,
+      b: HnswBuild): HnswServe =
+    serveGraph(spark, coll, field, b.dataPath, b.builtSeq)
 
-  /** Ensure a fresh persisted IVF_PQ (residual product-quantization)
-    * index — the [[ensureSq8]] lifecycle with an m-byte code payload
-    * and the codebook persisted beside the centroids.
-    */
-  def ensurePq(spark: SparkSession, coll: Collection, field: String,
-      metric: String, nlist: Int, m: Int, ksub: Int,
-      allowStale: Boolean = true): PqBuild = {
-    val seq = coll.committedSeq
-    val key = (cacheId(coll), field, metric, s"$nlist:$m:$ksub", seq)
-    pqCache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._5 != seq)
-    if (!allowStale)
-      pqCache.keySet.removeIf(k => k == key && pqCache.get(k) != null &&
-        pqCache.get(k).builtSeq != seq)
-    pqCache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      loadPq(dir, metric, nlist, m, ksub, seq)
-        .orElse(if (!allowStale) None
-          else staleLoad(spark, coll, dir, seq, pqKind(m, ksub),
-            p => p.kind == pqKind(m, ksub) && p.metric == metric &&
-              p.nlist == nlist,
-            s => versionDir(dir, s, pqKind(m, ksub), metric, nlist),
-            s => loadPq(dir, metric, nlist, m, ksub, s)))
-        .getOrElse(buildPq(spark, dir, coll, field, metric, nlist, m, ksub, seq))
-    })
-  }
+  // ---- sparse, BM25, JSON path, geo grid ------------------------------------
 
-  /** Ensure a fresh persisted BIN_IVF_FLAT (binary-vector IVF,
-    * k-majority cells) index — the [[ensureIvf]] lifecycle over
-    * Hamming geometry.
+  private def sparseShape(numBuckets: Int) = Shape("sparse2", "IP", numBuckets)
+
+  private def sparseAt(numBuckets: Int)(vdir: StorePath, s: Long) =
+    SparseBuild(vdir.resolve("postings").toString, numBuckets, s,
+      vdir.resolve("dimstats").toString)
+
+  /** The build's WAND impact stats, collected once per build version
+    * and held driver-side like IVF centroids.
     */
-  def ensureBinIvf(spark: SparkSession, coll: Collection,
-      field: String, nlist: Int, allowStale: Boolean = true): BinIvfBuild = {
-    val seq = coll.committedSeq
-    val key = (cacheId(coll), field, nlist, seq)
-    binIvfCache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._4 != seq)
-    if (!allowStale)
-      binIvfCache.keySet.removeIf(k => k == key && binIvfCache.get(k) != null &&
-        binIvfCache.get(k).builtSeq != seq)
-    binIvfCache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      loadBinIvf(dir, nlist, seq)
-        .orElse(if (!allowStale) None
-          else staleLoad(spark, coll, dir, seq, "binivf2",
-            p => p.kind == "binivf2" && p.nlist == nlist,
-            s => versionDir(dir, s, "binivf2", "HAMMING", nlist),
-            s => loadBinIvf(dir, nlist, s)))
-        .getOrElse(buildBinIvf(spark, dir, coll, field, nlist, seq))
-    })
-  }
+  def sparseDimStats(spark: SparkSession,
+      build: SparseBuild): Map[Int, (Double, Double)] =
+    derive(build.dimStatsPath)(
+      SparseInverted.collectDimStats(spark.read.parquet(build.dimStatsPath)))
 
   /** Ensure a fresh persisted sparse inverted index: dimension
     * postings `partitionBy(_db)` so a query's scan prunes to its
     * dimensions' bucket directories.
     */
   def ensureSparse(spark: SparkSession, coll: Collection,
-      field: String, numBuckets: Int): SparseBuild = {
-    val seq = coll.committedSeq
-    val key = (cacheId(coll), field, numBuckets, seq)
-    sparseCache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._4 != seq)
-    sparseCache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      loadSparse(dir, numBuckets, seq).getOrElse {
-        val pk = coll.definition.primaryField.name
-        val vdir = versionDir(dir, seq, "sparse2", "IP", numBuckets)
-        val postingsPath = vdir.resolve("postings").toString
-        val statsPath = vdir.resolve("dimstats").toString
-        // `_part` rides along like the dense family ([[vectorLayout]]):
-        // a partition-scoped sparse search prunes partition subtrees
-        // before the bucket filter prunes dimension directories.
-        val postings = SparseInverted.postings(
-          coll.readWithPartition(spark).filter(col(field).isNotNull),
-          field, pk, numBuckets, carry = Seq("_part"))
-        val parts = vectorLayout(coll, SparseInverted.BUCKET)
-        postings
-          .repartition(parts.map(col): _*)
-          .write.mode("overwrite")
-          .partitionBy(parts: _*).parquet(postingsPath)
-        // WAND impact stats: one row per distinct dimension, read back
-        // pruned to the query's dims (SPARSE_WAND, workload.py:151).
-        // Global bounds stay VALID (conservative) upper bounds for any
-        // partition-scoped subset.
-        SparseInverted.dimStats(spark.read.parquet(postingsPath))
-          .coalesce(1).write.mode("overwrite").parquet(statsPath)
-        commitPointer(dir, seq, "sparse2", "IP", numBuckets)
-        SparseBuild(postingsPath, numBuckets, seq, statsPath)
-      }
-    })
-  }
+      field: String, numBuckets: Int): SparseBuild =
+    ensure(spark, coll, field, sparseShape(numBuckets), allowStale = false)(
+      sparseAt(numBuckets)) { (vdir, seq) =>
+      val b = sparseAt(numBuckets)(vdir, seq)
+      // `_part` rides along like the dense family ([[vectorLayout]]):
+      // a partition-scoped sparse search prunes partition subtrees
+      // before the bucket filter prunes dimension directories.
+      val postings = SparseInverted.postings(
+        coll.readWithPartition(spark).filter(col(field).isNotNull),
+        field, coll.definition.primaryField.name, numBuckets,
+        carry = Seq("_part"))
+      val parts = vectorLayout(coll, SparseInverted.BUCKET)
+      postings
+        .repartition(parts.map(col): _*)
+        .write.mode("overwrite")
+        .partitionBy(parts: _*).parquet(b.postingsPath)
+      // WAND impact stats: one row per distinct dimension, read back
+      // pruned to the query's dims (SPARSE_WAND, workload.py:151).
+      // Global bounds stay VALID (conservative) upper bounds for any
+      // partition-scoped subset.
+      SparseInverted.dimStats(spark.read.parquet(b.postingsPath))
+        .coalesce(1).write.mode("overwrite").parquet(b.dimStatsPath)
+      b
+    }
 
-  /** The servable sparse postings frame: sealed alone when fresh,
-    * otherwise sealed ∖ changed-pks ∪ growing (exact — IP scores carry
-    * no corpus stats, so unlike BM25 nothing needs adjusting).
-    * `deltaServed` tells WAND callers to take the exact bucket-pruned
-    * route instead: the persisted per-dim impact bounds do NOT cover
-    * the growing postings, so max-score pruning with them could
-    * wrongly exclude a new high-impact posting (the exact route
-    * returns identical results; pruning resumes at the next rebuild).
-    */
-  final case class SparseServe(postings: DataFrame, deltaServed: Boolean,
-      build: SparseBuild)
-
+  /** The servable sparse postings frame ([[SparseServe]]). */
   def serveSparse(spark: SparkSession, coll: Collection, field: String,
       numBuckets: Int): SparseServe = {
     val seq = coll.committedSeq
-    val dir = indexDir(coll, field)
-    val stale = staleLoad[SparseBuild](spark, coll, dir, seq, "sparse2",
-      p => p.kind == "sparse2" && p.nlist == numBuckets,
-      s => versionDir(dir, s, "sparse2", "IP", numBuckets),
-      s => loadSparse(dir, numBuckets, s))
-    stale.foreach { b =>
+    staleLoad(spark, coll, field, seq, sparseShape(numBuckets))(
+      sparseAt(numBuckets)).foreach { b =>
       coll.deltaViewSince(spark, b.builtSeq).foreach {
         case (newRows, changedPks) =>
           val pk = coll.definition.primaryField.name
@@ -558,9 +739,7 @@ object IndexStore {
           val growing = SparseInverted.postings(
             newRows.filter(col(field).isNotNull), field, pk, numBuckets,
             carry = Seq("_part"))
-          val aligned = growing.select(sealedSide.columns.map(c =>
-            col(c).cast(sealedSide.schema(c).dataType).as(c)): _*)
-          return SparseServe(sealedSide.unionByName(aligned),
+          return SparseServe(sealedSide.unionByName(alignTo(sealedSide, growing)),
             deltaServed = true, b)
       }
     }
@@ -568,35 +747,61 @@ object IndexStore {
     SparseServe(spark.read.parquet(b.postingsPath), deltaServed = false, b)
   }
 
-  private def loadSparse(dir: StorePath, numBuckets: Int,
-      seq: Long): Option[SparseBuild] =
-    readPointer(dir, "sparse2").filter(p => p.builtSeq == seq && p.kind == "sparse2" &&
-      p.nlist == numBuckets).map { _ =>
-      val vdir = versionDir(dir, seq, "sparse2", "IP", numBuckets)
-      SparseBuild(vdir.resolve("postings").toString, numBuckets, seq,
-        vdir.resolve("dimstats").toString)
-    }
+  private def bm25Shape(params: Bm25.Params) = Shape("bm25", params.analyzer, 0)
+
+  private def bm25At(params: Bm25.Params)(vdir: StorePath, s: Long) =
+    Bm25Build(Bm25.readIndexMeta(vdir.toString, params), s)
 
   def ensureBm25(spark: SparkSession, coll: Collection,
-      field: String, params: Bm25.Params): Bm25Build = {
+      field: String, params: Bm25.Params): Bm25Build =
+    ensure(spark, coll, field, bm25Shape(params), allowStale = false)(
+      bm25At(params)) { (vdir, seq) =>
+      Bm25Build(Bm25.buildPersisted(coll.read(spark), field,
+        coll.definition.primaryField.name, vdir.toString, params), seq)
+    }
+
+  /** BM25 text top-k with sealed/growing delta serving: a build whose
+    * post-DML delta volume passes [[staleServable]] keeps serving —
+    * [[Bm25.topKDeltaServed]] adjusts the global stats exactly, so the
+    * result is identical to a rebuild's. Falls back to the usual lazy
+    * full rebuild above the gate (or for pre-doclen layouts / the
+    * late-import window).
+    */
+  def searchTextServed(spark: SparkSession, coll: Collection,
+      field: String, params: Bm25.Params, query: String,
+      k: Int): DataFrame = {
     val seq = coll.committedSeq
-    val key = (cacheId(coll), field, params.analyzer, seq)
-    bm25Cache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._4 != seq)
-    bm25Cache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      loadBm25(dir, params, seq).getOrElse(
-        buildBm25(spark, dir, coll, field, params, seq))
-    })
+    staleLoad(spark, coll, field, seq, bm25Shape(params))(bm25At(params))
+      .filter(_.persisted.doclenPath.nonEmpty).foreach { b =>
+      coll.deltaViewSince(spark, b.builtSeq).foreach {
+        case (newRows, changedPks) =>
+          val growing = newRows.select(
+            col(coll.definition.primaryField.name), col(field))
+          // Growing mini-postings (a delta-sized tokenize, pinned) and
+          // the stats adjustment (a doclen-table scan) each run once
+          // per (build, DML generation), not per query.
+          val gen = s"${params.analyzer}/${b.builtSeq}"
+          val gposts = cached(coll, field, s"bm25growing/$gen", seq)(
+            Bm25.growingPostings(b.persisted, growing, field))
+          val st = cached(coll, field, s"bm25stats/$gen", seq)(
+            Bm25.deltaStats(spark, b.persisted, gposts, changedPks))
+          return Bm25.topKDeltaServed(spark, b.persisted, query, k,
+            growing, changedPks, field, Some(st), Some(gposts))
+      }
+    }
+    val b = ensureBm25(spark, coll, field, params)
+    Bm25.topKPersisted(spark, b.persisted, query, k)
   }
 
-  /** Ensure a fresh persisted JSON-path index (3.0 "JSON Path Index",
-    * Sort kind): the extracted, typed path value is materialized as a
-    * (pk, _v) table range-partitioned AND sorted on `_v`, so a value
-    * predicate prunes whole files via parquet min/max stats — the
-    * columnar equivalent of a sorted secondary index.
-    */
-  /** JSON Path index kinds (3.0 plan §4: `Sort`, `Bitmap`, `Hybrid`):
+  private def jsonPathShape(path: String, castType: String, kind: String) =
+    Shape(IndexFamily.JsonPath(path, castType, kind, 0).pointerFamily,
+      castType, 0, s"$path/$kind")
+
+  private def jsonPathValue(field: String, path: String, castType: String) =
+    expr(s"try_cast(get_json_object($field, '$path') AS $castType)").as("_v")
+
+  /** JSON Path index kinds (3.0 plan §4: `Sort`, `Bitmap`, `Hybrid`),
+    * materialized as a (pk, _v) table of the extracted, typed value:
     *
     *  - `sort` — range-partition + sort on the value: each file owns a
     *    value range, so range/equality predicates prune whole files via
@@ -615,52 +820,40 @@ object IndexStore {
     */
   def ensureJsonPath(spark: SparkSession, coll: Collection,
       field: String, path: String, castType: String,
-      kind: String = "sort", bitmapCardinality: Int = 1024): JsonPathBuild = {
-    val seq = coll.committedSeq
-    val key = (cacheId(coll), field, path, s"$castType/$kind", seq)
-    jsonPathCache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._3 == path && k._5 != seq)
-    jsonPathCache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      val pathTag = jsonPathTag(path, kind)
-      loadJsonPath(dir, path, castType, kind, seq).getOrElse {
-        val pk = coll.definition.primaryField.name
-        val vdir = versionDir(dir, seq, pathTag, castType, 0)
-        val dataPath = vdir.resolve("data").toString
-        val base = coll.read(spark)
-          .select(col(pk),
-            expr(s"try_cast(get_json_object($field, '$path') AS $castType)")
-              .as("_v"))
-        val effective = kind.toLowerCase match {
-          case "hybrid" =>
-            if (base.select("_v").distinct().count() <= bitmapCardinality)
-              "bitmap"
-            else "sort"
-          case k => k
-        }
-        effective match {
-          case "bitmap" =>
-            // One shuffle to co-locate values -> one file per value
-            // directory (null values land in the Hive default-partition
-            // directory and read back as null, matching the sort
-            // layout's null handling).
-            base.repartition(col("_v"))
-              .write.mode("overwrite").partitionBy("_v").parquet(dataPath)
-          case "sort" =>
-            base.repartitionByRange(col("_v"))
-              .sortWithinPartitions("_v")
-              .write.mode("overwrite").parquet(dataPath)
-          case other => throw new IllegalArgumentException(
-            s"unknown JSON_PATH index kind $other (sort | bitmap | hybrid)")
-        }
-        vdir.resolve("path.json").writeBytes(JsonMethods.compact(
-          JsonMethods.render(("path" -> path) ~ ("cast" -> castType) ~
-            ("kind" -> kind) ~ ("layout" -> effective))).getBytes)
-        commitPointer(dir, seq, pathTag, castType, 0)
-        JsonPathBuild(dataPath, path, castType, seq)
+      kind: String = "sort", bitmapCardinality: Int = 1024): JsonPathBuild =
+    ensure(spark, coll, field, jsonPathShape(path, castType, kind),
+      allowStale = false)((vdir, s) => JsonPathBuild(
+      vdir.resolve("data").toString, path, castType, s)) { (vdir, seq) =>
+      val dataPath = vdir.resolve("data").toString
+      val base = coll.read(spark).select(
+        col(coll.definition.primaryField.name),
+        jsonPathValue(field, path, castType))
+      val effective = kind.toLowerCase match {
+        case "hybrid" =>
+          if (base.select("_v").distinct().count() <= bitmapCardinality)
+            "bitmap"
+          else "sort"
+        case k => k
       }
-    })
-  }
+      effective match {
+        case "bitmap" =>
+          // One shuffle to co-locate values -> one file per value
+          // directory (null values land in the Hive default-partition
+          // directory and read back as null, matching the sort
+          // layout's null handling).
+          base.repartition(col("_v"))
+            .write.mode("overwrite").partitionBy("_v").parquet(dataPath)
+        case "sort" =>
+          base.repartitionByRange(col("_v"))
+            .sortWithinPartitions("_v")
+            .write.mode("overwrite").parquet(dataPath)
+        case other => throw new IllegalArgumentException(
+          s"unknown JSON_PATH index kind $other (sort | bitmap | hybrid)")
+      }
+      writeJson(vdir.resolve("path.json"), ("path" -> path) ~
+        ("cast" -> castType) ~ ("kind" -> kind) ~ ("layout" -> effective))
+      JsonPathBuild(dataPath, path, castType, seq)
+    }
 
   /** The servable (pk, _v) value frame of a JSON-path index: the
     * sealed table alone when fresh; otherwise sealed ∖ changed-pks ∪
@@ -675,42 +868,22 @@ object IndexStore {
       field: String, path: String, castType: String,
       kind: String = "sort", bitmapCardinality: Int = 1024): DataFrame = {
     val seq = coll.committedSeq
-    val dir = indexDir(coll, field)
-    val tag = jsonPathTag(path, kind)
     val pk = coll.definition.primaryField.name
-    val stale = staleLoad[JsonPathBuild](spark, coll, dir, seq, tag,
-      p => p.kind == tag && p.metric == castType,
-      s => versionDir(dir, s, tag, castType, 0),
-      s => Some(JsonPathBuild(
-        versionDir(dir, s, tag, castType, 0).resolve("data").toString,
-        path, castType, s)))
-    stale.foreach { b =>
-      coll.deltaViewSince(spark, b.builtSeq).foreach {
-        case (newRows, changedPks) =>
-          val sealedSide = spark.read.parquet(b.dataPath)
-            .join(broadcast(changedPks), Seq(pk), "left_anti")
-            .select(col(pk), col("_v").cast(castType).as("_v"))
-          val growing = newRows.select(col(pk),
-            expr(s"try_cast(get_json_object($field, '$path') AS $castType)")
-              .as("_v"))
-          return sealedSide.unionByName(growing)
-      }
+    staleLoad(spark, coll, field, seq, jsonPathShape(path, castType, kind))(
+      (vdir, s) => vdir.resolve("data").toString -> s).foreach {
+      case (dataPath, builtSeq) =>
+        coll.deltaViewSince(spark, builtSeq).foreach {
+          case (newRows, changedPks) =>
+            val sealedSide = spark.read.parquet(dataPath)
+              .join(broadcast(changedPks), Seq(pk), "left_anti")
+              .select(col(pk), col("_v").cast(castType).as("_v"))
+            return sealedSide.unionByName(
+              newRows.select(col(pk), jsonPathValue(field, path, castType)))
+        }
     }
     spark.read.parquet(ensureJsonPath(spark, coll, field, path, castType,
       kind, bitmapCardinality).dataPath)
   }
-
-  private def jsonPathTag(path: String, kind: String): String =
-    s"jp${kind.toLowerCase.take(1)}${(path.hashCode.toLong & 0xffffffffL).toString}"
-
-  private def loadJsonPath(dir: StorePath, path: String, castType: String,
-      kind: String, seq: Long): Option[JsonPathBuild] =
-    readPointer(dir, jsonPathTag(path, kind)).filter(p => p.builtSeq == seq &&
-      p.kind == jsonPathTag(path, kind) && p.metric == castType).map { _ =>
-      JsonPathBuild(
-        versionDir(dir, seq, jsonPathTag(path, kind), castType, 0)
-          .resolve("data").toString, path, castType, seq)
-    }
 
   /** Ensure a fresh persisted grid geo index for a WKT point `field` —
     * the Spark-native analog of the reference's RTREE declaration
@@ -724,336 +897,73 @@ object IndexStore {
     * Exact point-in-polygon then refines only the surviving cells.
     */
   def ensureRtree(spark: SparkSession, coll: Collection,
-      field: String, cellSize: Double = 8.0): RtreeBuild = {
-    val seq = coll.committedSeq
-    val key = (cacheId(coll), field, cellSize.toString, seq)
-    rtreeCache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._4 != seq)
-    rtreeCache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      val tag = s"grid${cellSize.toString.replace('.', 'p')}"
-      loadRtree(dir, cellSize, tag, seq).getOrElse {
-        val pk = coll.definition.primaryField.name
-        val vdir = versionDir(dir, seq, tag, "wkt", 0)
-        val dataPath = vdir.resolve("data").toString
-        val num = "[-+0-9.eE]+"
-        val x = regexp_extract(col(field),
-          s"(?i)POINT\\s*\\(\\s*($num)", 1).cast("double")
-        val y = regexp_extract(col(field),
-          s"(?i)POINT\\s*\\(\\s*$num\\s+($num)", 1).cast("double")
-        coll.read(spark).filter(col(field).isNotNull)
-          .select(col(pk), col(field), x.as("_x"), y.as("_y"))
-          .filter(col("_x").isNotNull && col("_y").isNotNull)
-          .withColumn("_gcell", concat(
-            floor(col("_x") / cellSize).cast("long"), lit("_"),
-            floor(col("_y") / cellSize).cast("long")))
-          // one shuffle to co-locate cells -> one file per cell dir
-          .repartition(col("_gcell"))
-          .write.mode("overwrite").partitionBy("_gcell").parquet(dataPath)
-        commitPointer(dir, seq, tag, "wkt", 0)
-        RtreeBuild(dataPath, cellSize, seq)
-      }
-    })
-  }
-
-  private def loadRtree(dir: StorePath, cellSize: Double, tag: String,
-      seq: Long): Option[RtreeBuild] =
-    readPointer(dir, tag).filter(p => p.builtSeq == seq && p.kind == tag)
-      .map(_ => RtreeBuild(
-        versionDir(dir, seq, tag, "wkt", 0).resolve("data").toString,
-        cellSize, seq))
-
-  /** Ensure a fresh persisted random-hyperplane LSH index: the
-    * [[Lsh.explodeTables]] layout written `partitionBy("_t", "_sig")`
-    * so EVERY hash table's probe set prunes bucket directories at the
-    * scan (see the layout note on explodeTables), plus the seeded
-    * plane matrix in `planes.json`. Hyperplanes are data-independent,
-    * so the rebuild after DML is one signature projection + shuffle —
-    * no training scan.
-    */
-  def ensureLsh(spark: SparkSession, coll: Collection, field: String,
-      metric: String, tables: Int, numPlanes: Int,
-      seed: Long = 42L, allowStale: Boolean = true): LshBuild = {
-    val seq = coll.committedSeq
-    val paramTag = s"$metric/$tables/$numPlanes/$seed"
-    val key = (cacheId(coll), field, paramTag, seq)
-    lshCache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._4 != seq)
-    if (!allowStale)
-      lshCache.keySet.removeIf(k => k == key && lshCache.get(k) != null &&
-        lshCache.get(k).builtSeq != seq)
-    lshCache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      val tag = s"lsh2_${tables}x$numPlanes"
-      // tables/planes ride in the pointer's nlist slot, packed.
-      val packed = tables * 1000 + numPlanes
-      loadLsh(dir, metric, tag, packed, seq)
-        .orElse(if (!allowStale) None
-          else staleLoad(spark, coll, dir, seq, tag,
-            p => p.kind == tag && p.metric == metric && p.nlist == packed,
-            s => versionDir(dir, s, tag, metric, packed),
-            s => loadLsh(dir, metric, tag, packed, s)))
-        .getOrElse {
-        val snapshot = coll.readWithPartition(spark)
-          .filter(col(field).isNotNull)
-        // dim comes from the data, not the declared FieldDef — the
-        // signature must cover the stored vectors exactly.
-        val dim = snapshot.select(size(col(field))).head().getInt(0)
-        val model = Lsh.train(dim, tables, numPlanes, metric, seed)
-        val vdir = versionDir(dir, seq, tag, metric, packed)
-        val dataPath = vdir.resolve("data").toString
-        // one shuffle on the leaf layout key -> one file per leaf
-        // bucket directory (see [[vectorLayout]] for the conditional
-        // `_part` outer level, same as the IVF family)
-        val parts = vectorLayout(coll, "_t", "_sig")
-        Lsh.explodeTables(snapshot, field, model)
-          .repartition(parts.map(col): _*)
-          .write.mode("overwrite").partitionBy(parts: _*)
-          .parquet(dataPath)
-        vdir.resolve("planes.json").writeBytes(JsonMethods.compact(
-          JsonMethods.render(("metric" -> metric) ~ ("seed" -> seed) ~
-            ("planes" -> model.planes.toSeq.map(_.toSeq.map(_.toSeq))))).getBytes)
-        commitPointer(dir, seq, tag, metric, packed)
-        LshBuild(model, dataPath, seq)
-      }
-    })
-  }
-
-  private def loadLsh(dir: StorePath, metric: String, tag: String,
-      packed: Int, seq: Long): Option[LshBuild] =
-    readPointer(dir, tag).filter(p => p.builtSeq == seq && p.kind == tag &&
-      p.metric == metric && p.nlist == packed).map { _ =>
-      implicit val fmt: Formats = DefaultFormats
-      val vdir = versionDir(dir, seq, tag, metric, packed)
-      val j = JsonMethods.parse(
-        new String(vdir.resolve("planes.json").readBytes))
-      val planes = (j \ "planes").extract[Seq[Seq[Seq[Double]]]]
-        .map(_.map(_.toArray).toArray).toArray
-      LshBuild(Lsh.Model(planes, metric), vdir.resolve("data").toString, seq)
+      field: String, cellSize: Double = 8.0): RtreeBuild =
+    ensure(spark, coll, field,
+      Shape(IndexFamily.Rtree(cellSize).pointerFamily, "wkt", 0),
+      allowStale = false)((vdir, s) =>
+      RtreeBuild(vdir.resolve("data").toString, cellSize, s)) { (vdir, seq) =>
+      val dataPath = vdir.resolve("data").toString
+      val num = "[-+0-9.eE]+"
+      val x = regexp_extract(col(field),
+        s"(?i)POINT\\s*\\(\\s*($num)", 1).cast("double")
+      val y = regexp_extract(col(field),
+        s"(?i)POINT\\s*\\(\\s*$num\\s+($num)", 1).cast("double")
+      coll.read(spark).filter(col(field).isNotNull)
+        .select(col(coll.definition.primaryField.name), col(field),
+          x.as("_x"), y.as("_y"))
+        .filter(col("_x").isNotNull && col("_y").isNotNull)
+        .withColumn("_gcell", concat(
+          floor(col("_x") / cellSize).cast("long"), lit("_"),
+          floor(col("_y") / cellSize).cast("long")))
+        // one shuffle to co-locate cells -> one file per cell dir
+        .repartition(col("_gcell"))
+        .write.mode("overwrite").partitionBy("_gcell").parquet(dataPath)
+      RtreeBuild(dataPath, cellSize, seq)
     }
+
+  // ---- create / drop / describe ---------------------------------------------
+
+  /** Eager materialization for create_index: the build the search
+    * routes will serve for `ix`, as the [[IndexFamily]] table resolves
+    * it — always FRESH (allowStale=false): an explicit build request
+    * must not return a growing-segment-served stale build; lazy
+    * serving is a SEARCH-path policy. Scalar INVERTED/STL_SORT/TRIE
+    * build nothing: PK-sorted row groups + parquet min/max stats
+    * already serve them (Collection.writeDelta).
+    */
+  def materialize(spark: SparkSession, coll: Collection,
+      ix: IndexDef): Unit = {
+    import IndexFamily.{Bm25Text, BinIvfFlat, Diskann, Hnsw => HnswF,
+      IvfPq, IvfRabitq, IvfSq8, JsonPath, Lsh => LshF, Rtree, Sparse}
+    val (f, metric) = (ix.field, ix.metricType.getOrElse("COSINE").toUpperCase)
+    val graph = IndexFamily.graphServed(coll.definition, metric)
+    IndexFamily.of(ix) match {
+      case IvfSq8(nlist) => ensureSq8(spark, coll, f, metric, nlist, false): Unit
+      case IvfRabitq(nlist) =>
+        ensureRabitq(spark, coll, f, metric, nlist, false): Unit
+      case IvfPq(nlist, m, ksub) =>
+        ensurePq(spark, coll, f, metric, nlist, m, ksub, false): Unit
+      case h: HnswF if graph => ensureHnsw(spark, coll, f, metric, h.m,
+        h.efConstruction, h.segments, h.seed, allowStale = false): Unit
+      case d: Diskann if graph => ensureDiskann(spark, coll, f, metric, d.r,
+        d.l, d.alpha, d.segments, allowStale = false): Unit
+      case BinIvfFlat(nlist) => ensureBinIvf(spark, coll, f, nlist, false): Unit
+      case LshF(tables, planes, seed) =>
+        ensureLsh(spark, coll, f, metric, tables, planes, seed, false): Unit
+      case Sparse(buckets, _) => ensureSparse(spark, coll, f, buckets): Unit
+      case Bm25Text => ensureBm25(spark, coll, f, Bm25.Params()): Unit
+      case Rtree(cellSize) => ensureRtree(spark, coll, f, cellSize): Unit
+      case j: JsonPath =>
+        if (j.path.isEmpty)
+          throw new IllegalArgumentException("JSON_PATH index needs a path")
+        ensureJsonPath(spark, coll, f, j.path, j.castType, j.kind,
+          j.bitmapCardinality): Unit
+      case other => other.ivfNlist.foreach(nlist =>
+        ensureIvf(spark, coll, f, metric, nlist, allowStale = false))
+    }
+  }
 
   /** Force a rebuild at the current seq (reference rebuild-index op). */
-  // ---- HNSW (persisted graph family) --------------------------------------
-
-  private def hnswKind(m: Int, efc: Int, segs: Int, seed: Long): String =
-    s"hnsw1-${m}-${efc}-${segs}-$seed"
-
-  /** Bounded per-segment row cap for graph builds
-    * (`graft.graph.maxSegmentRows`): each segment's graph is built
-    * IN-TASK memory (arrays O(size × (dim + m × levels))), so the cap
-    * — never the data size — is what bounds executor memory at scale:
-    * more data means MORE segments, never bigger ones. Search fans
-    * the beam walk out per segment and unions candidates exactly, so
-    * recall is shard-count-invariant. 250k 64-dim nodes ≈ 140 MB of
-    * task arrays — comfortable in a 4 GB executor with headroom for
-    * the scan.
-    */
-  private def graphSegments(spark: SparkSession, coll: Collection,
-      pinned: Option[Int]): Int =
-    pinned.getOrElse {
-      val cap = spark.conf.getOption("graft.graph.maxSegmentRows")
-        .map(_.toLong).getOrElse(250000L)
-      val rows = coll.read(spark).count()
-      math.max(spark.sessionState.conf.numShufflePartitions,
-        math.ceil(rows.toDouble / cap).toInt)
-    }
-
-  /** The segment count a live family pointer's build was pinned with,
-    * when its other parameters match — reuse and stale-serve must
-    * resolve the SAME kind string, so auto-sizing may not drift away
-    * from an existing build.
-    */
-  private def pointerSegs(dir: StorePath, family: String,
-      matches: Array[String] => Boolean, segAt: Int): Option[Int] =
-    readPointer(dir, family).flatMap { p =>
-      val parts = p.kind.split("-")
-      if (kindFamily(p.kind) == family && parts.length > segAt &&
-          scala.util.Try(matches(parts)).getOrElse(false))
-        scala.util.Try(parts(segAt).toInt).toOption
-      else None
-    }
-
-  /** Ensure a servable persisted HNSW graph index — the [[ensureIvf]]
-    * lifecycle with a graph-node payload: reuse at the current seq,
-    * stale-serve under the growing-segment gate (searches must then
-    * read through [[serveHnsw]], which masks changed pks out of the
-    * sealed graphs and brute-forces the delta), full rebuild
-    * otherwise. `segments = 0` resolves to a live pointer's pinned
-    * count when one matches, else to the bounded per-segment cap
-    * ([[graphSegments]] — one count job, paid only when a fresh build
-    * is being sized).
-    */
-  def ensureHnsw(spark: SparkSession, coll: Collection, field: String,
-      metric: String, m: Int, efConstruction: Int, segments: Int = 0,
-      seed: Long = 42L, allowStale: Boolean = true): HnswBuild = {
-    val seq = coll.committedSeq
-    val segs = if (segments > 0) segments
-      else graphSegments(spark, coll,
-        pointerSegs(indexDir(coll, field), "hnsw1",
-          ps => ps(1).toInt == m && ps(2).toInt == efConstruction &&
-            ps(4).toLong == seed, segAt = 3))
-    val kind = hnswKind(m, efConstruction, segs, seed)
-    val key = (cacheId(coll), field, metric, kind, seq)
-    hnswCache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._5 != seq)
-    if (!allowStale)
-      hnswCache.keySet.removeIf(k => k == key && hnswCache.get(k) != null &&
-        hnswCache.get(k).builtSeq != seq)
-    hnswCache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      loadHnsw(dir, metric, m, efConstruction, segs, seed, seq)
-        .orElse(if (!allowStale) None
-          else staleLoad(spark, coll, dir, seq, kind,
-            p => p.kind == kind && p.metric == metric && p.nlist == m,
-            s => versionDir(dir, s, kind, metric, m),
-            s => loadHnsw(dir, metric, m, efConstruction, segs, seed, s)))
-        .getOrElse(buildHnsw(spark, dir, coll, field, metric, m,
-          efConstruction, segs, seed, seq))
-    })
-  }
-
-  /** Sealed ⊎ growing view of a persisted GRAPH build (HNSW or Vamana
-    * — see [[HnswServe]]; both families persist the same node-table
-    * layout). The changed-pk mask is a broadcast anti-join on the
-    * graph's `id` column (bounded by [[staleServable]]'s byte cap);
-    * the rare late-committed-import window (deltaViewSince → None)
-    * degrades to an exact brute-force over the full current snapshot
-    * rather than serving an unsound merge.
-    */
-  def serveGraph(spark: SparkSession, coll: Collection, field: String,
-      dataPath: String, builtSeq: Long): HnswServe = {
-    val base = spark.read.parquet(dataPath)
-    if (builtSeq >= coll.committedSeq)
-      return HnswServe(base, None, deltaServed = false)
-    val pk = coll.definition.primaryField.name
-    coll.deltaViewSince(spark, builtSeq) match {
-      case Some((newRows, changedPks)) =>
-        val mask = changedPks.select(col(pk).cast("long").as("id"))
-        HnswServe(base.join(broadcast(mask), Seq("id"), "left_anti"),
-          Some(newRows.filter(col(field).isNotNull)), deltaServed = true)
-      case None =>
-        HnswServe(base.limit(0),
-          Some(coll.readWithPartition(spark).filter(col(field).isNotNull)),
-          deltaServed = true)
-    }
-  }
-
-  def serveHnsw(spark: SparkSession, coll: Collection, field: String,
-      b: HnswBuild): HnswServe =
-    serveGraph(spark, coll, field, b.dataPath, b.builtSeq)
-
-  private def buildHnsw(spark: SparkSession, dir: StorePath,
-      coll: Collection, field: String, metric: String, m: Int,
-      efc: Int, segs: Int, seed: Long, seq: Long): HnswBuild = {
-    // Null vectors are not indexed (see buildIvf).
-    val snapshot = coll.readWithPartition(spark).filter(col(field).isNotNull)
-    val pk = coll.definition.primaryField.name
-    val kind = hnswKind(m, efc, segs, seed)
-    val vdir = versionDir(dir, seq, kind, metric, m)
-    val dataPath = vdir.resolve("data").toString
-    val parts = vectorLayout(coll, "seg")
-    val params = Hnsw.Params(m, efc, metric, seed)
-    // One shuffle on the (part, seg) key — each task builds its
-    // segment's graph in memory and writes one leaf directory.
-    Hnsw.buildParts(snapshot, field, pk, "_part", params, segs)
-      .toDF().withColumnRenamed("part", "_part")
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(dataPath)
-    commitPointer(dir, seq, kind, metric, m)
-    HnswBuild(dataPath, m, efc, segs, seed, metric, seq)
-  }
-
-  private def loadHnsw(dir: StorePath, metric: String, m: Int, efc: Int,
-      segs: Int, seed: Long, seq: Long): Option[HnswBuild] = {
-    val kind = hnswKind(m, efc, segs, seed)
-    readPointer(dir, kind).filter(p => p.builtSeq == seq && p.kind == kind &&
-      p.metric == metric && p.nlist == m).map { _ =>
-      HnswBuild(versionDir(dir, seq, kind, metric, m)
-        .resolve("data").toString, m, efc, segs, seed, metric, seq)
-    }
-  }
-
-  // ---- DISKANN (Vamana graph family) ----------------------------------
-
-  /** Persisted Vamana build facts — served through [[serveGraph]] /
-    * [[graft.ann.Hnsw.searchParts]] (same node-table layout, medoid
-    * entry encoded as the sole level-1 node).
-    */
-  final case class VamanaBuild(dataPath: String, r: Int, l: Int,
-      alpha: Double, segments: Int, metric: String, builtSeq: Long)
-
-  private val vamanaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String, String, Long), VamanaBuild]()
-
-  private def vamanaKind(r: Int, l: Int, alpha: Double, segs: Int): String =
-    s"vamana1-$r-$l-${math.round(alpha * 100)}-$segs"
-
-  /** Ensure a servable persisted Vamana (DISKANN) graph index — the
-    * [[ensureHnsw]] lifecycle with the α-robust-pruned single-layer
-    * build in-task.
-    */
-  def ensureDiskann(spark: SparkSession, coll: Collection, field: String,
-      metric: String, r: Int, l: Int, alpha: Double, segments: Int = 0,
-      allowStale: Boolean = true): VamanaBuild = {
-    val seq = coll.committedSeq
-    // vamana1-r-l-alpha100-segs: segs at index 4 (see ensureHnsw for
-    // the pinned-pointer / bounded-cap resolution).
-    val segs = if (segments > 0) segments
-      else graphSegments(spark, coll,
-        pointerSegs(indexDir(coll, field), "vamana1",
-          ps => ps(1).toInt == r && ps(2).toInt == l &&
-            ps(3).toLong == math.round(alpha * 100), segAt = 4))
-    val kind = vamanaKind(r, l, alpha, segs)
-    val key = (cacheId(coll), field, metric, kind, seq)
-    vamanaCache.keySet.removeIf(k =>
-      k._1 == key._1 && k._2 == field && k._5 != seq)
-    if (!allowStale)
-      vamanaCache.keySet.removeIf(k => k == key &&
-        vamanaCache.get(k) != null && vamanaCache.get(k).builtSeq != seq)
-    vamanaCache.computeIfAbsent(key, _ => {
-      val dir = indexDir(coll, field)
-      loadVamana(dir, metric, r, l, alpha, segs, seq)
-        .orElse(if (!allowStale) None
-          else staleLoad(spark, coll, dir, seq, kind,
-            p => p.kind == kind && p.metric == metric && p.nlist == r,
-            s => versionDir(dir, s, kind, metric, r),
-            s => loadVamana(dir, metric, r, l, alpha, segs, s)))
-        .getOrElse(buildVamana(spark, dir, coll, field, metric, r, l,
-          alpha, segs, seq))
-    })
-  }
-
-  def serveDiskann(spark: SparkSession, coll: Collection, field: String,
-      b: VamanaBuild): HnswServe =
-    serveGraph(spark, coll, field, b.dataPath, b.builtSeq)
-
-  private def buildVamana(spark: SparkSession, dir: StorePath,
-      coll: Collection, field: String, metric: String, r: Int, l: Int,
-      alpha: Double, segs: Int, seq: Long): VamanaBuild = {
-    // Null vectors are not indexed (see buildIvf).
-    val snapshot = coll.readWithPartition(spark).filter(col(field).isNotNull)
-    val pk = coll.definition.primaryField.name
-    val kind = vamanaKind(r, l, alpha, segs)
-    val vdir = versionDir(dir, seq, kind, metric, r)
-    val dataPath = vdir.resolve("data").toString
-    val parts = vectorLayout(coll, "seg")
-    Vamana.buildParts(snapshot, field, pk, "_part",
-        Vamana.Params(r, l, alpha, metric), segs)
-      .toDF().withColumnRenamed("part", "_part")
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(dataPath)
-    commitPointer(dir, seq, kind, metric, r)
-    VamanaBuild(dataPath, r, l, alpha, segs, metric, seq)
-  }
-
-  private def loadVamana(dir: StorePath, metric: String, r: Int, l: Int,
-      alpha: Double, segs: Int, seq: Long): Option[VamanaBuild] = {
-    val kind = vamanaKind(r, l, alpha, segs)
-    readPointer(dir, kind).filter(p => p.builtSeq == seq && p.kind == kind &&
-      p.metric == metric && p.nlist == r).map { _ =>
-      VamanaBuild(versionDir(dir, seq, kind, metric, r)
-        .resolve("data").toString, r, l, alpha, segs, metric, seq)
-    }
-  }
-
   def rebuild(spark: SparkSession, coll: Collection,
       field: String): Unit = {
     val d = coll.definition
@@ -1063,115 +973,17 @@ object IndexStore {
     materialize(spark, coll, ix)
   }
 
-  /** Eager materialization for create_index. */
-  def materialize(spark: SparkSession, coll: Collection,
-      ix: IndexDef): Unit = {
-    val t = ix.indexType.toUpperCase
-    // create_index/rebuild always materialize FRESH (allowStale=false):
-    // an explicit build request must not return a growing-segment-served
-    // stale build — lazy serving is a SEARCH-path policy.
-    if (t == "IVF_RABITQ") {
-      val nlist = ix.params.get("nlist").map(_.toInt).getOrElse(16)
-      ensureRabitq(spark, coll, ix.field,
-        ix.metricType.getOrElse("COSINE"), nlist, allowStale = false): Unit
-    } else if (t == "IVF_SQ8") {
-      val nlist = ix.params.get("nlist").map(_.toInt).getOrElse(16)
-      ensureSq8(spark, coll, ix.field,
-        ix.metricType.getOrElse("COSINE"), nlist, allowStale = false): Unit
-    } else if (t == "BIN_IVF_FLAT") {
-      val nlist = ix.params.get("nlist").map(_.toInt).getOrElse(16)
-      ensureBinIvf(spark, coll, ix.field, nlist, allowStale = false): Unit
-    } else if (t == "IVF_PQ") {
-      val nlist = ix.params.get("nlist").map(_.toInt).getOrElse(16)
-      val m = ix.params.get("m").map(_.toInt).getOrElse(8)
-      // Milvus parameterizes codewords as nbits (ksub = 2^nbits,
-      // default 8); accept an explicit ksub too.
-      val ksub = ix.params.get("nbits").map(b => 1 << b.toInt)
-        .orElse(ix.params.get("ksub").map(_.toInt)).getOrElse(256)
-      ensurePq(spark, coll, ix.field,
-        ix.metricType.getOrElse("COSINE"), nlist, m, ksub,
-        allowStale = false): Unit
-    } else if (t == "HNSW") {
-      ensureHnsw(spark, coll, ix.field, ix.metricType.getOrElse("COSINE"),
-        ix.params.get("M").orElse(ix.params.get("m")).map(_.toInt)
-          .getOrElse(8),
-        ix.params.get("efConstruction").map(_.toInt).getOrElse(64),
-        ix.params.get("segments").map(_.toInt).getOrElse(0),
-        ix.params.get("seed").map(_.toLong).getOrElse(42L),
-        allowStale = false): Unit
-    } else if (t == "DISKANN") {
-      ensureDiskann(spark, coll, ix.field, ix.metricType.getOrElse("COSINE"),
-        ix.params.get("R").orElse(ix.params.get("r")).map(_.toInt)
-          .getOrElse(16),
-        ix.params.get("L").orElse(ix.params.get("l")).map(_.toInt)
-          .getOrElse(64),
-        ix.params.get("alpha").map(_.toDouble).getOrElse(1.2),
-        ix.params.get("segments").map(_.toInt).getOrElse(0),
-        allowStale = false): Unit
-    } else if (t.startsWith("IVF") || t == "AUTOINDEX") {
-      val nlist = ix.params.get("nlist").map(_.toInt).getOrElse(16)
-      ensureIvf(spark, coll, ix.field,
-        ix.metricType.getOrElse("COSINE"), nlist, allowStale = false): Unit
-    } else if (t == "SPARSE_INVERTED_INDEX" || t == "SPARSE_WAND") {
-      val buckets = ix.params.get("buckets").map(_.toInt).getOrElse(64)
-      ensureSparse(spark, coll, ix.field, buckets): Unit
-    } else if (t == "BM25" || t == "INVERTED_TEXT") {
-      ensureBm25(spark, coll, ix.field, Bm25.Params()): Unit
-    } else if (t == "RTREE") {
-      ensureRtree(spark, coll, ix.field,
-        ix.params.get("cell_size").map(_.toDouble).getOrElse(8.0)): Unit
-    } else if (t == "LSH" || t == "RHP_LSH") {
-      ensureLsh(spark, coll, ix.field, ix.metricType.getOrElse("COSINE"),
-        ix.params.get("tables").map(_.toInt).getOrElse(4),
-        ix.params.get("num_planes").map(_.toInt).getOrElse(8),
-        ix.params.get("seed").map(_.toLong).getOrElse(42L),
-        allowStale = false): Unit
-    } else if (t == "JSON_PATH") {
-      ensureJsonPath(spark, coll, ix.field,
-        ix.params.getOrElse("path",
-          throw new IllegalArgumentException("JSON_PATH index needs a path")),
-        ix.params.getOrElse("cast", "string"),
-        ix.params.getOrElse("kind", "sort"),
-        ix.params.get("bitmap_cardinality").map(_.toInt).getOrElse(1024)): Unit
-    }
-    // scalar INVERTED/STL_SORT/TRIE: PK-sorted row groups + parquet
-    // min/max stats already serve these (Collection.writeDelta)
-  }
-
-  /** Remove the persisted index and cached models for a field. */
+  /** Remove the persisted index and cached models for a field. The
+    * derived caches key on versioned paths, which a recreated
+    * same-name collection restarts its seq counter into and would
+    * REUSE (silently serving the old corpus's bounds or WAND impact
+    * stats) — evict by path prefix.
+    */
   def drop(coll: Collection, field: String): Unit = {
     val cid = cacheId(coll)
-    ivfCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    rabitqCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    sq8Cache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    pqCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    binIvfCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    sparseCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    bm25Cache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    // The stats/growing caches' (name, field, ..., seq) keys would be
-    // REUSED verbatim by a recreated same-name collection whose seq
-    // counter restarts — evict here or a new incarnation silently
-    // serves the old corpus's stats.
-    bm25StatsCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    bm25GrowingCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    jsonPathCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    rtreeCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    lshCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    hnswCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    vamanaCache.keySet.removeIf(k => k._1 == cid && k._2 == field)
-    // The lazy bounds caches key on the versioned dataPath — a
-    // recreated same-name collection restarts its seq counter and
-    // would REUSE the exact path, silently serving the old corpus's
-    // bounds. Evict by path prefix.
+    builds.keySet.removeIf(k => k._1 == cid && k._2 == field)
     val idxPrefix = indexDir(coll, field).toString
-    ivfBoundsCache.keySet.removeIf(_.startsWith(idxPrefix))
-    binRadiiCache.keySet.removeIf(_.startsWith(idxPrefix))
-    // Same hazard for the WAND impact stats (keyed on the versioned
-    // dimstats path, which a recreated same-name collection reuses
-    // once its seq counter catches up): a stale map would prune the
-    // new corpus's postings with the OLD per-dim upper bounds and
-    // silently drop hits.
-    dimStatsMapCache.keySet.removeIf(_.startsWith(idxPrefix))
+    derived.keySet.removeIf(_.startsWith(idxPrefix))
     indexDir(coll, field).deleteRecursively()
   }
 
@@ -1186,26 +998,8 @@ object IndexStore {
     * wrong WAND prunes at worst).
     */
   def dropAllCached(collectionDir: String): Unit = {
-    val cid = collectionDir
-    ivfCache.keySet.removeIf(_._1 == cid)
-    rabitqCache.keySet.removeIf(_._1 == cid)
-    sq8Cache.keySet.removeIf(_._1 == cid)
-    pqCache.keySet.removeIf(_._1 == cid)
-    binIvfCache.keySet.removeIf(_._1 == cid)
-    sparseCache.keySet.removeIf(_._1 == cid)
-    bm25Cache.keySet.removeIf(_._1 == cid)
-    bm25StatsCache.keySet.removeIf(_._1 == cid)
-    bm25GrowingCache.keySet.removeIf(_._1 == cid)
-    jsonPathCache.keySet.removeIf(_._1 == cid)
-    rtreeCache.keySet.removeIf(_._1 == cid)
-    lshCache.keySet.removeIf(_._1 == cid)
-    hnswCache.keySet.removeIf(_._1 == cid)
-    vamanaCache.keySet.removeIf(_._1 == cid)
-    // Path-keyed caches: every versioned path lives under the
-    // collection directory, so the directory IS the prefix.
-    ivfBoundsCache.keySet.removeIf(_.startsWith(cid))
-    binRadiiCache.keySet.removeIf(_.startsWith(cid))
-    dimStatsMapCache.keySet.removeIf(_.startsWith(cid))
+    builds.keySet.removeIf(_._1 == collectionDir)
+    derived.keySet.removeIf(_.startsWith(collectionDir))
   }
 
   /** Build-state introspection for describe_index (the reference reads
@@ -1213,33 +1007,21 @@ object IndexStore {
     * milvus_client/scalar_index_cycle.py:91-93): the committed
     * pointer's build facts, or None when the field has no persisted
     * build (a declared-only index serves lazily on first search).
+    * With per-family pointers a field can hold several live builds
+    * (a declared-HNSW collection whose range searches also built the
+    * IVF physical path): describe reports the DECLARED index's
+    * family when one matches, else the first pointer (deterministic).
     */
   def describe(coll: Collection, field: String): Option[Map[String, String]] = {
     val pointers = allPointers(indexDir(coll, field))
-    // With per-family pointers a field can hold several live builds
-    // (a declared-HNSW collection whose range searches also built the
-    // IVF physical path): describe reports the DECLARED index's
-    // family when one matches, else the first pointer (deterministic).
-    val declared = coll.definition.indexes.find(_.field == field)
-      .map(_.indexType.toUpperCase)
-    val familyOf: String => Option[String] = {
-      case "HNSW"                => Some("hnsw1")
-      case "DISKANN"             => Some("vamana1")
-      case "IVF_RABITQ"          => Some("rabitq2")
-      case "IVF_SQ8"             => Some("sq8v2")
-      case "IVF_PQ"              => Some("pqv1")
-      case "BIN_IVF_FLAT"        => Some("binivf2")
-      case "LSH" | "RHP_LSH"     => Some("lsh2")
-      case t if t.startsWith("SPARSE") => Some("sparse2")
-      case _                     => Some("ivf2")
-    }
-    val preferred = declared.flatMap(familyOf).flatMap(f =>
-      pointers.find(p => kindFamily(p.kind) == f))
-    preferred.orElse(pointers.headOption).map(p => Map(
-      "built_seq" -> p.builtSeq.toString,
-      "build_kind" -> p.kind,
-      "build_metric" -> p.metric,
-      "build_nlist" -> p.nlist.toString))
+    val declared =
+      IndexFamily.declared(coll.definition, field).pointerFamily
+    pointers.find(p => kindFamily(p.kind) == declared)
+      .orElse(pointers.headOption).map(p => Map(
+        "built_seq" -> p.builtSeq.toString,
+        "build_kind" -> p.kind,
+        "build_metric" -> p.metric,
+        "build_nlist" -> p.nlist.toString))
   }
 
   /** Names of fields with a live persisted build (for describe/stats). */
@@ -1252,38 +1034,7 @@ object IndexStore {
       .map(_.name).sorted
   }
 
-  // ---- IVF ----------------------------------------------------------------
-
-  private def buildIvf(spark: SparkSession, dir: StorePath, coll: Collection,
-      field: String, metric: String, nlist: Int, seq: Long): IvfBuild = {
-    // Null vectors (nullable vector fields, 3.0 plan §4) are not
-    // indexed: they can't be trained on (the sample collect would NPE)
-    // and must never surface from a probe.
-    val snapshot = coll.readWithPartition(spark).filter(col(field).isNotNull)
-    val model = Ivf.train(snapshot, field, k = nlist, metric = metric)
-    val vdir = versionDir(dir, seq, "ivf2", metric, nlist)
-    val dataPath = vdir.resolve("data").toString
-    // One shuffle on the LEAF layout key to co-locate each output
-    // directory's rows in one task -> one file per leaf directory,
-    // instead of every task writing into every leaf (tasks x nlist
-    // small files). See [[vectorLayout]] for the conditional `_part`
-    // outer level.
-    val parts = vectorLayout(coll, "_cid")
-    Ivf.assign(snapshot, field, model)
-      .repartition(parts.map(col): _*)
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(dataPath)
-    val centroids: JObject =
-      ("metric" -> metric) ~ ("nlist" -> nlist) ~
-      ("centroids" -> model.centroids.toSeq.map(_.toSeq))
-    vdir.resolve("centroids.json").writeBytes(
-      JsonMethods.compact(JsonMethods.render(centroids)).getBytes)
-    commitPointer(dir, seq, "ivf2", metric, nlist)
-    // Per-cell pruning bounds are LAZY since round 12 — see
-    // [[ivfBounds]]: builds that only ever serve probe-budget ANN
-    // never pay the bounds pass; the first range/iterator query
-    // computes and persists them.
-    IvfBuild(model, dataPath, nlist, seq, None)
-  }
+  // ---- lazy range bounds ----------------------------------------------------
 
   /** Parse a version dir's persisted `cell_radii.json` (absent on
     * builds that haven't served a bounded query yet and on
@@ -1291,26 +1042,18 @@ object IndexStore {
     * defaults — angle pi, norms [0, +inf) — so pruning stays lossless).
     */
   private def readIvfBoundsJson(vdir: StorePath): Option[Ivf.CellBounds] = {
-    implicit val fmt: Formats = DefaultFormats
     val rfile = vdir.resolve("cell_radii.json")
     if (!rfile.exists) None
     else {
-      val rj = JsonMethods.parse(new String(rfile.readBytes))
+      val rj = readJson(rfile)
       val radii = (rj \ "radii").extract[Seq[Double]].toArray
-      val k = radii.length
-      Some(Ivf.CellBounds(
-        radii,
-        (rj \ "angles").extractOpt[Seq[Double]].map(_.toArray)
-          .getOrElse(Array.fill(k)(math.Pi)),
-        (rj \ "max_norm").extractOpt[Seq[Double]].map(_.toArray)
-          .getOrElse(Array.fill(k)(Double.MaxValue)),
-        (rj \ "min_norm").extractOpt[Seq[Double]].map(_.toArray)
-          .getOrElse(Array.fill(k)(0.0))))
+      def slice(key: String, default: Double): Array[Double] =
+        (rj \ key).extractOpt[Seq[Double]].map(_.toArray)
+          .getOrElse(Array.fill(radii.length)(default))
+      Some(Ivf.CellBounds(radii, slice("angles", math.Pi),
+        slice("max_norm", Double.MaxValue), slice("min_norm", 0.0)))
     }
   }
-
-  private val ivfBoundsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Ivf.CellBounds]()
 
   /** Per-cell pruning bounds (max L2 radius, max member angle, norm
     * extrema — the exact range-search bounds for L2/COSINE/IP),
@@ -1318,316 +1061,50 @@ object IndexStore {
     * FIRST bounded query (range search, search iterator) computes them
     * with one column-pruned pass over the persisted layout — reads
     * only (vec, _cid) — persists `cell_radii.json` next to the data
-    * for every later load (loadIvf picks it up eagerly), and memoizes
-    * per dataPath (the path is versioned, so DML invalidation is free,
-    * same pattern as [[sparseDimStats]]). ANN-only collections never
-    * pay the pass. The cache-the-assignment alternative was measured
-    * and rejected this round: caching full rows for the write+bounds
-    * pair cost +53% bytes_read and +63% cpu at sf0.1 vs this pruned
-    * read, because the cache stores (and re-reads) every column while
-    * the read-back touches two.
+    * for every later load, and memoizes per dataPath (the path is
+    * versioned, so DML invalidation is free, same pattern as
+    * [[sparseDimStats]]). ANN-only collections never pay the pass. The
+    * cache-the-assignment alternative was measured and rejected: caching
+    * full rows for the write+bounds pair cost +53% bytes_read and +63%
+    * cpu at sf0.1 vs this pruned read, because the cache stores (and
+    * re-reads) every column while the read-back touches two.
     */
   def ivfBounds(spark: SparkSession, build: IvfBuild,
       field: String): Ivf.CellBounds =
-    build.bounds.getOrElse(
-      ivfBoundsCache.computeIfAbsent(build.dataPath, _ => {
-        val vdir = StorePath(build.dataPath).parent
-        readIvfBoundsJson(vdir).getOrElse {
-          val b = Ivf.cellBounds(
-            spark.read.parquet(build.dataPath)
-              .select(col(field), col("_cid")), field, build.model)
-          val radiiJson: JObject =
-            ("radii" -> b.radii.toSeq) ~ ("angles" -> b.angles.toSeq) ~
-              ("max_norm" -> b.maxNorm.toSeq) ~
-              ("min_norm" -> b.minNorm.toSeq)
-          vdir.resolve("cell_radii.json").writeBytes(
-            JsonMethods.compact(JsonMethods.render(radiiJson)).getBytes)
-          b
-        }
-      }))
-
-  private def loadIvf(dir: StorePath, metric: String, nlist: Int,
-      seq: Long): Option[IvfBuild] =
-    readPointer(dir, "ivf2").filter(p => p.builtSeq == seq && p.kind == "ivf2" &&
-      p.metric == metric && p.nlist == nlist).map { _ =>
-      implicit val fmt: Formats = DefaultFormats
-      val vdir = versionDir(dir, seq, "ivf2", metric, nlist)
-      val j = JsonMethods.parse(
-        new String(vdir.resolve("centroids.json").readBytes))
-      val cents = (j \ "centroids").extract[Seq[Seq[Double]]]
-        .map(_.toArray).toArray
-      // cell_radii.json exists only once a bounded query has computed
-      // it (lazy since round 12; eagerly written by round-11 builds):
-      // absent -> bounds stay None and [[ivfBounds]] computes them on
-      // first demand; ANN probes never need them.
-      IvfBuild(Ivf.Model(cents, metric), vdir.resolve("data").toString,
-        nlist, seq, readIvfBoundsJson(vdir))
-    }
-
-  // ---- RaBitQ -------------------------------------------------------------
-
-  private def buildRabitq(spark: SparkSession, dir: StorePath, coll: Collection,
-      field: String, metric: String, nlist: Int, seq: Long): RabitqBuild = {
-    // Null vectors are not indexed (see buildIvf).
-    val snapshot = coll.readWithPartition(spark).filter(col(field).isNotNull)
-    val model = Ivf.train(snapshot, field, k = nlist, metric = metric)
-    val vdir = versionDir(dir, seq, "rabitq2", metric, nlist)
-    val dataPath = vdir.resolve("data").toString
-    val parts = vectorLayout(coll, "_cid")
-    RaBitQ.encode(snapshot, field, model)
-      .repartition(parts.map(col): _*)
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(dataPath)
-    val centroids: JObject =
-      ("metric" -> metric) ~ ("nlist" -> nlist) ~
-      ("centroids" -> model.centroids.toSeq.map(_.toSeq))
-    vdir.resolve("centroids.json").writeBytes(
-      JsonMethods.compact(JsonMethods.render(centroids)).getBytes)
-    commitPointer(dir, seq, "rabitq2", metric, nlist)
-    RabitqBuild(model, dataPath, nlist, seq)
-  }
-
-  private def loadRabitq(dir: StorePath, metric: String, nlist: Int,
-      seq: Long): Option[RabitqBuild] =
-    readPointer(dir, "rabitq2").filter(p => p.builtSeq == seq && p.kind == "rabitq2" &&
-      p.metric == metric && p.nlist == nlist).map { _ =>
-      implicit val fmt: Formats = DefaultFormats
-      val vdir = versionDir(dir, seq, "rabitq2", metric, nlist)
-      val j = JsonMethods.parse(
-        new String(vdir.resolve("centroids.json").readBytes))
-      val cents = (j \ "centroids").extract[Seq[Seq[Double]]]
-        .map(_.toArray).toArray
-      RabitqBuild(Ivf.Model(cents, metric), vdir.resolve("data").toString,
-        nlist, seq)
-    }
-
-  // ---- IVF_SQ8 ------------------------------------------------------------
-
-  private def buildSq8(spark: SparkSession, dir: StorePath, coll: Collection,
-      field: String, metric: String, nlist: Int, seq: Long): Sq8Build = {
-    // Null vectors are not indexed (see buildIvf).
-    val snapshot = coll.readWithPartition(spark).filter(col(field).isNotNull)
-    val model = Sq8.train(snapshot, field, nlist, metric)
-    val vdir = versionDir(dir, seq, "sq8v2", metric, nlist)
-    val dataPath = vdir.resolve("data").toString
-    val parts = vectorLayout(coll, "_cid")
-    Sq8.encode(snapshot, field, model)
-      .repartition(parts.map(col): _*)
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(dataPath)
-    val meta: JObject =
-      ("metric" -> metric) ~ ("nlist" -> nlist) ~
-      ("centroids" -> model.ivf.centroids.toSeq.map(_.toSeq)) ~
-      ("mins" -> model.mins.toSeq) ~ ("maxs" -> model.maxs.toSeq)
-    vdir.resolve("sq8.json").writeBytes(
-      JsonMethods.compact(JsonMethods.render(meta)).getBytes)
-    commitPointer(dir, seq, "sq8v2", metric, nlist)
-    Sq8Build(model, dataPath, nlist, seq)
-  }
-
-  private def loadSq8(dir: StorePath, metric: String, nlist: Int,
-      seq: Long): Option[Sq8Build] =
-    readPointer(dir, "sq8v2").filter(p => p.builtSeq == seq && p.kind == "sq8v2" &&
-      p.metric == metric && p.nlist == nlist).map { _ =>
-      implicit val fmt: Formats = DefaultFormats
-      val vdir = versionDir(dir, seq, "sq8v2", metric, nlist)
-      val j = JsonMethods.parse(
-        new String(vdir.resolve("sq8.json").readBytes))
-      val cents = (j \ "centroids").extract[Seq[Seq[Double]]]
-        .map(_.toArray).toArray
-      val mins = (j \ "mins").extract[Seq[Double]].toArray
-      val maxs = (j \ "maxs").extract[Seq[Double]].toArray
-      Sq8Build(Sq8.Model(Ivf.Model(cents, metric), mins, maxs),
-        vdir.resolve("data").toString, nlist, seq)
-    }
-
-  // ---- IVF_PQ -------------------------------------------------------------
-
-  private def pqKind(m: Int, ksub: Int): String = s"pqv1_${m}_$ksub"
-
-  private def buildPq(spark: SparkSession, dir: StorePath, coll: Collection,
-      field: String, metric: String, nlist: Int, m: Int, ksub: Int,
-      seq: Long): PqBuild = {
-    // Null vectors are not indexed (see buildIvf).
-    val snapshot = coll.readWithPartition(spark).filter(col(field).isNotNull)
-    val model = Pq.train(snapshot, field, nlist, m, ksub, metric)
-    val vdir = versionDir(dir, seq, pqKind(m, ksub), metric, nlist)
-    val dataPath = vdir.resolve("data").toString
-    val parts = vectorLayout(coll, "_cid")
-    Pq.encode(snapshot, field, model)
-      .repartition(parts.map(col): _*)
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(dataPath)
-    val meta: JObject =
-      ("metric" -> metric) ~ ("nlist" -> nlist) ~
-      ("centroids" -> model.ivf.centroids.toSeq.map(_.toSeq)) ~
-      ("codebook" -> model.codebook.toSeq.map(_.toSeq.map(_.toSeq)))
-    vdir.resolve("pq.json").writeBytes(
-      JsonMethods.compact(JsonMethods.render(meta)).getBytes)
-    commitPointer(dir, seq, pqKind(m, ksub), metric, nlist)
-    PqBuild(model, dataPath, nlist, seq)
-  }
-
-  private def loadPq(dir: StorePath, metric: String, nlist: Int, m: Int,
-      ksub: Int, seq: Long): Option[PqBuild] =
-    readPointer(dir, pqKind(m, ksub)).filter(p => p.builtSeq == seq &&
-      p.kind == pqKind(m, ksub) && p.metric == metric &&
-      p.nlist == nlist).map { _ =>
-      implicit val fmt: Formats = DefaultFormats
-      val vdir = versionDir(dir, seq, pqKind(m, ksub), metric, nlist)
-      val j = JsonMethods.parse(new String(vdir.resolve("pq.json").readBytes))
-      val cents = (j \ "centroids").extract[Seq[Seq[Double]]]
-        .map(_.toArray).toArray
-      val codebook = (j \ "codebook").extract[Seq[Seq[Seq[Double]]]]
-        .map(_.map(_.toArray).toArray).toArray
-      PqBuild(Pq.Model(Ivf.Model(cents, metric), codebook),
-        vdir.resolve("data").toString, nlist, seq)
-    }
-
-  // ---- BIN_IVF_FLAT -------------------------------------------------------
-
-  private def buildBinIvf(spark: SparkSession, dir: StorePath,
-      coll: Collection, field: String, nlist: Int,
-      seq: Long): BinIvfBuild = {
-    // Null vectors are not indexed (see buildIvf).
-    val snapshot = coll.readWithPartition(spark).filter(col(field).isNotNull)
-    val model = BinIvf.train(snapshot, field, k = nlist)
-    val vdir = versionDir(dir, seq, "binivf2", "HAMMING", nlist)
-    val dataPath = vdir.resolve("data").toString
-    val parts = vectorLayout(coll, BinIvf.CID)
-    BinIvf.assign(snapshot, field, model)
-      .repartition(parts.map(col): _*)
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(dataPath)
-    val meta: JObject = ("nlist" -> nlist) ~
-      ("centroids" -> model.centroids.toSeq.map(c =>
-        c.map(b => f"${b & 0xff}%02x").mkString))
-    vdir.resolve("binivf.json").writeBytes(
-      JsonMethods.compact(JsonMethods.render(meta)).getBytes)
-    commitPointer(dir, seq, "binivf2", "HAMMING", nlist)
-    // Per-cell Hamming radii are LAZY since round 12 — see
-    // [[binIvfRadii]]: ANN-only collections never pay the pass.
-    BinIvfBuild(model, dataPath, nlist, seq, None)
-  }
-
-  private val binRadiiCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
+    build.bounds.getOrElse(derive(build.dataPath) {
+      val vdir = StorePath(build.dataPath).parent
+      readIvfBoundsJson(vdir).getOrElse {
+        val b = Ivf.cellBounds(
+          spark.read.parquet(build.dataPath)
+            .select(col(field), col("_cid")), field, build.model)
+        writeJson(vdir.resolve("cell_radii.json"),
+          ("radii" -> b.radii.toSeq) ~ ("angles" -> b.angles.toSeq) ~
+            ("max_norm" -> b.maxNorm.toSeq) ~ ("min_norm" -> b.minNorm.toSeq))
+        b
+      }
+    })
 
   /** Per-cell max member-to-centroid Hamming distance (the exact
-    * range-search pruning bound), LAZY (round-12, same discipline as
-    * [[ivfBounds]]): the first bounded query computes it with one
-    * column-pruned pass over the persisted layout, persists
-    * `cell_radii.json` next to the data, and memoizes per versioned
-    * dataPath. Legacy round-11 builds that embedded `radii` inside
-    * binivf.json keep loading eagerly through [[loadBinIvf]].
+    * range-search pruning bound), LAZY with the [[ivfBounds]]
+    * discipline. Legacy round-11 builds embedded `radii` inside
+    * binivf.json (json4s extracts a MISSING Seq as Nil — empties
+    * filtered so they fall through to the lazy compute).
     */
   def binIvfRadii(spark: SparkSession, build: BinIvfBuild,
-      field: String): Array[Long] =
-    build.radii.getOrElse(
-      binRadiiCache.computeIfAbsent(build.dataPath, _ => {
-        implicit val fmt: Formats = DefaultFormats
-        val vdir = StorePath(build.dataPath).parent
-        val rfile = vdir.resolve("cell_radii.json")
-        if (rfile.exists)
-          (JsonMethods.parse(new String(rfile.readBytes)) \ "radii")
-            .extract[Seq[Long]].toArray
-        else {
-          val radii = BinIvf.cellRadii(
-            spark.read.parquet(build.dataPath)
-              .select(col(field), col(BinIvf.CID)), field, build.model)
-          val rj: JObject = "radii" -> radii.toSeq
-          rfile.writeBytes(
-            JsonMethods.compact(JsonMethods.render(rj)).getBytes)
-          radii
-        }
-      }))
-
-  private def loadBinIvf(dir: StorePath, nlist: Int,
-      seq: Long): Option[BinIvfBuild] =
-    readPointer(dir, "binivf2").filter(p => p.builtSeq == seq && p.kind == "binivf2" &&
-      p.nlist == nlist).map { _ =>
-      implicit val fmt: Formats = DefaultFormats
-      val vdir = versionDir(dir, seq, "binivf2", "HAMMING", nlist)
-      val j = JsonMethods.parse(
-        new String(vdir.resolve("binivf.json").readBytes))
-      val cents = (j \ "centroids").extract[Seq[String]].map { hexStr =>
-        hexStr.grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
-      }.toArray
-      // radii: embedded in binivf.json on legacy round-11 builds,
-      // lazily persisted as cell_radii.json since round 12 (see
-      // binIvfRadii); absent on builds that never served a bounded
-      // query — computed on first demand.
-      // (json4s extracts a MISSING field as Some(Nil) for Seq types —
-      // filter empties or a legacy-less build short-circuits the lazy
-      // compute with a zero-length array.)
-      val rfile = vdir.resolve("cell_radii.json")
-      val radii = (j \ "radii").extractOpt[Seq[Long]].map(_.toArray)
+      field: String): Array[Long] = derive(build.dataPath) {
+    val vdir = StorePath(build.dataPath).parent
+    val rfile = vdir.resolve("cell_radii.json")
+    def radiiIn(f: StorePath): Option[Array[Long]] =
+      Some(f).filter(_.exists).flatMap(f =>
+        (readJson(f) \ "radii").extractOpt[Seq[Long]].map(_.toArray))
         .filter(_.nonEmpty)
-        .orElse(
-          if (!rfile.exists) None
-          else Some((JsonMethods.parse(new String(rfile.readBytes))
-            \ "radii").extract[Seq[Long]].toArray).filter(_.nonEmpty))
-      BinIvfBuild(BinIvf.Model(cents), vdir.resolve("data").toString,
-        nlist, seq, radii)
+    radiiIn(vdir.resolve("binivf.json")).orElse(radiiIn(rfile)).getOrElse {
+      val radii = BinIvf.cellRadii(
+        spark.read.parquet(build.dataPath)
+          .select(col(field), col(BinIvf.CID)), field, build.model)
+      writeJson(rfile, "radii" -> radii.toSeq)
+      radii
     }
-
-  // ---- BM25 ---------------------------------------------------------------
-
-  private def buildBm25(spark: SparkSession, dir: StorePath, coll: Collection,
-      field: String, params: Bm25.Params, seq: Long): Bm25Build = {
-    val snapshot = coll.read(spark)
-    val pk = coll.definition.primaryField.name
-    val vdir = versionDir(dir, seq, "bm25", params.analyzer, 0)
-    val persisted =
-      Bm25.buildPersisted(snapshot, field, pk, vdir.toString, params)
-    commitPointer(dir, seq, "bm25", params.analyzer, 0)
-    Bm25Build(persisted, seq)
-  }
-
-  private def loadBm25(dir: StorePath, params: Bm25.Params,
-      seq: Long): Option[Bm25Build] =
-    readPointer(dir, "bm25").filter(p => p.builtSeq == seq && p.kind == "bm25" &&
-      p.metric == params.analyzer).map { _ =>
-      Bm25Build(Bm25.readIndexMeta(
-        versionDir(dir, seq, "bm25", params.analyzer, 0).toString, params), seq)
-    }
-
-  /** BM25 text top-k with sealed/growing delta serving: a build whose
-    * post-DML delta volume passes [[staleServable]] keeps serving —
-    * [[Bm25.topKDeltaServed]] adjusts the global stats exactly, so the
-    * result is identical to a rebuild's. Falls back to the usual lazy
-    * full rebuild above the gate (or for pre-doclen layouts / the
-    * late-import window).
-    */
-  def searchTextServed(spark: SparkSession, coll: Collection,
-      field: String, params: Bm25.Params, query: String,
-      k: Int): DataFrame = {
-    val seq = coll.committedSeq
-    val dir = indexDir(coll, field)
-    val stale = staleLoad[Bm25Build](spark, coll, dir, seq, "bm25",
-      p => p.kind == "bm25" && p.metric == params.analyzer,
-      s => versionDir(dir, s, "bm25", params.analyzer, 0),
-      s => Some(Bm25Build(Bm25.readIndexMeta(
-        versionDir(dir, s, "bm25", params.analyzer, 0).toString, params), s)))
-    stale.filter(_.persisted.doclenPath.nonEmpty).foreach { b =>
-      coll.deltaViewSince(spark, b.builtSeq).foreach {
-        case (newRows, changedPks) =>
-          val growing = newRows.select(
-            col(coll.definition.primaryField.name), col(field))
-          // Growing mini-postings (a delta-sized tokenize, pinned) and
-          // the stats adjustment (a doclen-table scan) each run once
-          // per (build, DML generation), not per query.
-          val genKey = (cacheId(coll), field, params.analyzer, b.builtSeq, seq)
-          bm25StatsCache.keySet.removeIf(kk =>
-            kk._1 == genKey._1 && kk._2 == field && kk._5 != seq)
-          bm25GrowingCache.keySet.removeIf(kk =>
-            kk._1 == genKey._1 && kk._2 == field && kk._5 != seq)
-          val gposts = bm25GrowingCache.computeIfAbsent(genKey, _ =>
-            Bm25.growingPostings(b.persisted, growing, field))
-          val st = bm25StatsCache.computeIfAbsent(genKey, _ =>
-            Bm25.deltaStats(spark, b.persisted, gposts, changedPks))
-          return Bm25.topKDeltaServed(spark, b.persisted, query, k,
-            growing, changedPks, field, Some(st), Some(gposts))
-      }
-    }
-    val b = ensureBm25(spark, coll, field, params)
-    Bm25.topKPersisted(spark, b.persisted, query, k)
   }
 
   // ---- pointer ------------------------------------------------------------
@@ -1730,8 +1207,7 @@ object IndexStore {
   private def parsePointer(f: StorePath): Option[Pointer] =
     if (!f.exists) None
     else {
-      implicit val fmt: Formats = DefaultFormats
-      val j = JsonMethods.parse(new String(f.readBytes))
+      val j = readJson(f)
       Some(Pointer((j \ "builtSeq").extract[Long],
         (j \ "kind").extract[String], (j \ "metric").extract[String],
         (j \ "nlist").extract[Int]))

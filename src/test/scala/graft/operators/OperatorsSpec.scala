@@ -31,6 +31,18 @@ class OperatorsSpec extends SparkSpec {
     assert(big == expected)
   }
 
+  test("single-query top-k plans as TakeOrderedAndProject, not a global sort") {
+    val s = spark
+    import s.implicits._
+    val emb = Tables.load(s, sfDir, "embeddings")
+    val qv = emb.filter($"vec_id" === 0).select("embedding")
+      .head().getSeq[Float](0)
+    val plan = Knn.searchOne(emb, qv, "embedding", "vec_id", "COSINE", 10)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(!plan.contains("Exchange rangepartitioning"), plan)
+  }
+
   test("two-level top-k plan: salted pre-prune window at k>=1000, absent at k=10") {
     val s = spark
     import s.implicits._
@@ -191,8 +203,11 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("schema matrix YAML loads the reference's 2.6 manifest") {
-    val m = graft.store.SchemaMatrix.load(
-      "/root/reference/milvus-bricks/milvus_client/manifests/schema_matrix_2_6.yaml")
+    // The manifest ships as a test resource (rebuilt from the reference's
+    // manifests/schema_matrix_2_6.yaml), so the suite needs no checkout
+    // of the reference.
+    val m = graft.store.SchemaMatrix.load(java.nio.file.Paths.get(
+      getClass.getResource("/manifests/schema_matrix_2_6.yaml").toURI).toString)
     assert(m.version == "2.6")
     assert(m.entries.map(_.collection.name) == Seq(
       "scalar_dynamic_partition_key", "vector_autoid_bm25",
